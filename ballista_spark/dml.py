@@ -56,6 +56,7 @@ table's registered view refreshes to the new snapshot.
 from __future__ import annotations
 
 import datetime
+import json
 import re
 from dataclasses import dataclass, field
 
@@ -65,6 +66,10 @@ __all__ = ["parse_dml", "execute_dml", "parse_where_triples", "DmlError"]
 class DmlError(ValueError):
     pass
 
+
+#: every statement returns one row of this schema (version is NULL for
+#: statements that commit nothing)
+_RESULT_SCHEMA = "operation string, table string, version long"
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
@@ -520,10 +525,7 @@ def execute_dml(ctx, stmt: DmlStatement):
         ctx.create_external_table(
             stmt.table, stmt.location, file_type=stmt.file_type, **kwargs
         )
-        return spark.createDataFrame(
-            [("create_external", stmt.table, None)],
-            "operation string, table string, version long",
-        )
+        return _result_row(spark, "create_external", stmt.table, None)
     entry = ctx._lakehouse.get(stmt.table)  # noqa: SLF001 — friend module
     if entry is None:
         known = sorted(ctx._lakehouse)  # noqa: SLF001
@@ -853,7 +855,19 @@ def execute_dml(ctx, stmt: DmlStatement):
         "insert", "insert_overwrite",
     ):
         ctx._refresh_lakehouse_view(stmt.table)  # noqa: SLF001
-    return spark.createDataFrame(
-        [(stmt.op, stmt.table, version)],
-        "operation string, table string, version long",
+    return _result_row(spark, stmt.op, stmt.table, version)
+
+
+def _result_row(spark, op: str, table: str, version: int | None):
+    """The statement's one-row result, built in the JVM: rows from
+    ``createDataFrame`` scan a Python RDD, so every collect would start
+    Python workers.  ``from_json`` yields the schema's nullable fields,
+    and Catalyst folds the parse into literals."""
+    from pyspark.sql import functions as F
+
+    row = json.dumps({"operation": op, "table": table, "version": version})
+    return (
+        spark.range(0, 1, 1, 1)
+        .select(F.from_json(F.lit(row), _RESULT_SCHEMA).alias("r"))
+        .select("r.*")
     )

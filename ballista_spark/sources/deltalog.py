@@ -33,10 +33,19 @@ Scale design:
   columns derived by Spark, one scan node.  Non-hive layouts fall back
   to a per-partition-value union with literal columns (correct, more
   plan nodes; the fallback logs a warning naming the cost).
-- **Commits are put-if-absent.**  ``{version:020d}.json`` is created
-  with an exclusive-create open; a losing racer re-reads the snapshot
-  and retries on top (optimistic concurrency, the Delta commit
-  protocol).
+- **One optimistic commit path** (``_commit``).  Every writer builds
+  its actions against the snapshot it read and publishes
+  ``{version:020d}.json`` at that snapshot's version + 1 with a
+  put-if-absent create.  A loser re-reads the log and rebuilds there:
+  metadata changes (ALTER, properties, renames, protocol upgrades)
+  are recomputed on the new snapshot, so a racer's change is never
+  overwritten; a data commit whose replaced files are no longer live
+  (or now carry another deletion vector) refuses with
+  :class:`DeltaConcurrentCommitError` instead of resurrecting or
+  duplicating the winner's rows, and so does an overwrite when a racer
+  added a file; an already-recorded ``txn`` returns
+  None.  Otherwise it retries, up to ``MAX_COMMIT_ATTEMPTS``.  Every
+  commit at a multiple of ``CHECKPOINT_INTERVAL`` writes a checkpoint.
 - **Filesystem-agnostic metadata plane** (round 8): every log/staging
   IO site routes through ``sources/fsio.py`` — plain paths keep the
   local ``os`` fast-path, URIs (s3://, hdfs://, + Hadoop spellings
@@ -47,14 +56,17 @@ Scale design:
   ``mapInPandas`` pass instead of a serial driver loop
   (``_collect_file_stats``).
 
-Supported protocol subset (checked, not assumed): reader version ≤ 2
-plus the columnMapping table feature (reader version 3 tables whose
-readerFeatures are exactly that) — column-mapped tables (modes name/id)
-READ correctly (physical parquet names resolved to the logical schema,
-physically-keyed stats/partitionValues normalized for pruning); writes
-to them refuse (this writer stages logical-named files).  No deletion
-vectors, no generated columns.  A table demanding more raises with the
-feature named rather than silently misreading.
+Supported protocol subset (checked, not assumed): reader version ≤ 2,
+plus reader version 3 tables whose readerFeatures are columnMapping
+and/or deletionVectors.  Column-mapped tables (modes name/id) read and
+write under physical names (stats/partitionValues normalized to
+logical for pruning).  Deletion vectors are read (all three storage
+types), written by DELETE on request, and purged by any rewrite of
+the file.  Writes check the writer protocol first
+(``_check_writer_protocol``): generated, identity, invariant and
+constraint columns, and unknown writer features, refuse.  A table
+demanding more raises with the feature named rather than silently
+misreading.
 
 The reference engine's source surface is CSV/Parquet/Avro file scans
 (`rust/core/proto/ballista.proto:244-258`) with no table-format layer;
@@ -68,7 +80,7 @@ import dataclasses
 import json
 import os
 import uuid
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass, field
 from urllib.parse import unquote as _unquote
 
@@ -106,13 +118,25 @@ MAX_WRITER_VERSION = 2
 #: must not trust it as exact
 _STRING_STATS_TRUNCATION = 32
 
+#: every commit at a multiple of this version writes a checkpoint, so a
+#: snapshot read replays at most this many JSON commits
+CHECKPOINT_INTERVAL = 10
+#: commit attempts, each on the newest snapshot, before a writer gives up
+MAX_COMMIT_ATTEMPTS = 10
+#: the protocol this writer creates tables with
+_DEFAULT_PROTOCOL = {
+    "minReaderVersion": 1,
+    "minWriterVersion": MAX_WRITER_VERSION,
+}
+
 
 class DeltaProtocolError(RuntimeError):
     """Table requires protocol features this subset does not implement."""
 
 
 class DeltaConcurrentCommitError(RuntimeError):
-    """Commit lost the optimistic-concurrency race too many times."""
+    """A concurrent commit changed files this commit replaces, or the
+    commit lost the optimistic-concurrency race too many times."""
 
 
 # ---------------------------------------------------------------------------
@@ -481,7 +505,12 @@ def read_delta_snapshot(table_path: str, version: int | None = None) -> DeltaSna
                     size=int(a.get("size") or 0),
                     # raw string: _AddFile.stats parses lazily on access
                     stats=stats if isinstance(stats, (str, dict)) else None,
-                    deletion_vector=dict(dv) if isinstance(dv, dict) else None,
+                    # checkpoint rows carry absent descriptor fields as
+                    # nulls; dropping them keeps descriptors comparable
+                    deletion_vector=(
+                        {k: v for k, v in dv.items() if v is not None}
+                        if isinstance(dv, dict) else None
+                    ),
                 )
             elif "remove" in action:
                 r = action["remove"]
@@ -519,7 +548,10 @@ def read_delta_snapshot(table_path: str, version: int | None = None) -> DeltaSna
                 rv = int(pr.get("minReaderVersion", 1))
                 feats = set(pr.get("readerFeatures") or [])
                 reader_features = feats
-                protocol_action = dict(pr)
+                # checkpoint rows carry absent feature lists as nulls
+                protocol_action = {
+                    k: v for k, v in pr.items() if v is not None
+                }
                 # v3 REQUIRES a readerFeatures list; absent/empty means
                 # the requirement is unknown -> refuse, don't guess
                 if rv > MAX_READER_VERSION and not (
@@ -1273,6 +1305,125 @@ def _attempt_commit(table_path: str, version: int, actions: list[dict]) -> None:
     )
 
 
+def _replayed(snap: DeltaSnapshot | None, txn: tuple[str, int] | None) -> bool:
+    """``snap`` already records the ``txn`` (appId, version) — the Delta
+    exactly-once handshake: a replayed batch must not commit again."""
+    if txn is None or snap is None:
+        return False
+    committed = snap.app_versions.get(txn[0])
+    return committed is not None and committed >= txn[1]
+
+
+def _commit(
+    table_path: str,
+    snap: DeltaSnapshot | None,
+    operation: str,
+    parameters: Mapping[str, str],
+    *,
+    plan: Callable[[DeltaSnapshot | None], dict | None] | None = None,
+    remove: Sequence[_AddFile] = (),
+    add: Sequence[dict] = (),
+    data_change: bool = True,
+    txn: tuple[str, int] | None = None,
+) -> int | None:
+    """Publish one commit on top of ``snap`` (None: create the table) at
+    ``snap.version + 1`` — the single optimistic-commit path of every
+    writer here.  Returns the version, or None when nothing committed.
+
+    ``plan(snap)`` gives the table-metadata change to make on that
+    snapshot: ``{}`` for none; ``schema`` / ``partition_columns`` /
+    ``configuration`` keys become one metaData action (the rest carried
+    from ``snap``, the table id kept); a ``protocol`` that differs
+    becomes a protocol action; None commits nothing.  ``remove`` are the
+    live files the commit replaces, ``add`` its staged add actions.
+
+    A lost race re-reads the log and retries on the new snapshot:
+    ``plan`` runs again there, a recorded ``txn`` returns None, and a
+    replaced file that is gone — or carries another deletion vector —
+    raises :class:`DeltaConcurrentCommitError` (committing would bring
+    back or duplicate the winner's rows)."""
+    for attempt in range(MAX_COMMIT_ATTEMPTS):
+        if attempt:
+            snap = read_delta_snapshot(table_path)
+        if _replayed(snap, txn):
+            return None
+        if attempt and remove:  # the first snapshot is the one read
+            live = {f.path: f.deletion_vector for f in snap.files}
+            gone = sorted(
+                f.path for f in remove
+                if f.path not in live or live[f.path] != f.deletion_vector
+            )
+            if gone:
+                raise DeltaConcurrentCommitError(
+                    f"{operation}: files it replaces changed in a concurrent "
+                    f"commit (table now at version {snap.version}): "
+                    f"{gone[:3]}; rerun on the new snapshot"
+                )
+        change = {} if plan is None else plan(snap)
+        if change is None:
+            return None
+        ts = _now_ms()
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": ts,
+                    "operation": operation,
+                    "operationParameters": dict(parameters),
+                }
+            }
+        ]
+        state = {"protocol": _DEFAULT_PROTOCOL} if snap is None else {
+            "protocol": snap.protocol,
+            "schema": snap.schema,
+            "partition_columns": snap.partition_columns,
+            "configuration": snap.configuration,
+        }
+        new = {**state, **change}
+        if snap is None or new["protocol"] != snap.protocol:
+            actions.append({"protocol": dict(new["protocol"])})
+        if snap is None or set(change) - {"protocol"}:
+            actions.append(
+                {
+                    "metaData": {
+                        # the table's stable identity: fresh only at creation
+                        "id": (snap and snap.table_id) or str(uuid.uuid4()),
+                        "format": {"provider": "parquet", "options": {}},
+                        "schemaString": new["schema"].json(),
+                        "partitionColumns": list(new["partition_columns"]),
+                        "configuration": dict(new["configuration"]),
+                        "createdTime": ts,
+                    }
+                }
+            )
+        if txn is not None:
+            actions.append(
+                {"txn": {"appId": txn[0], "version": txn[1], "lastUpdated": ts}}
+            )
+        actions += [
+            {
+                "remove": {
+                    "path": f.path,
+                    "deletionTimestamp": ts,
+                    "dataChange": data_change,
+                }
+            }
+            for f in remove
+        ]
+        actions += add
+        version = 0 if snap is None else snap.version + 1
+        try:
+            _attempt_commit(table_path, version, actions)
+        except FileExistsError:
+            continue
+        if version and version % CHECKPOINT_INTERVAL == 0:
+            _write_checkpoint(table_path, version)
+        return version
+    raise DeltaConcurrentCommitError(
+        f"{operation} lost the commit race {MAX_COMMIT_ATTEMPTS} times at "
+        f"{table_path!r}"
+    )
+
+
 def _now_ms() -> int:
     import time
 
@@ -1416,8 +1567,6 @@ def write_delta_table(
     table_path: str,
     mode: str = "append",
     partition_by: list[str] | None = None,
-    checkpoint_interval: int = 10,
-    max_retries: int = 10,
     txn_app_id: str | None = None,
     txn_version: int | None = None,
 ) -> int | None:
@@ -1427,11 +1576,12 @@ def write_delta_table(
     partition dirs) into a staging dir, moved into the table, then the
     commit JSON is published with exclusive-create — readers see either
     the old snapshot or the new one, never a torn state.  ``mode``:
-    ``append`` adds files; ``overwrite`` also removes the previous
-    snapshot's files (logically — data files stay for time travel until
-    a vacuum).  A lost commit race re-reads the log and retries with the
-    next version (append) or fails cleanly (overwrite, where the removes
-    may be stale).
+    ``append`` adds files; ``overwrite`` also removes the files of the
+    snapshot it read (logically — data files stay for time travel until
+    a vacuum).  A lost commit race retries on the new snapshot (see
+    ``_commit``): an append retries on top of the winner, while an
+    overwrite raced by any commit that adds or removes a file raises
+    :class:`DeltaConcurrentCommitError` (it read the whole table).
 
     ``txn_app_id``/``txn_version`` make the commit IDEMPOTENT (the Delta
     ``txn`` action): a version already recorded for the app id is
@@ -1445,6 +1595,7 @@ def write_delta_table(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version go together")
+    txn = None if txn_app_id is None else (txn_app_id, int(txn_version))
     prior = (
         read_delta_snapshot(table_path)
         if _list_log_versions(table_path)
@@ -1456,10 +1607,8 @@ def write_delta_table(
         partition_by = prior.partition_columns
     partition_by = list(partition_by or [])
     fsio.mkdirs(table_path)
-    if txn_app_id is not None and prior is not None:
-        committed = prior.app_versions.get(txn_app_id)
-        if committed is not None and committed >= int(txn_version):
-            return None  # replay of an already-committed batch
+    if _replayed(prior, txn):
+        return None  # replay of an already-committed batch
 
     adds = _stage_data_files(
         df,
@@ -1467,122 +1616,63 @@ def write_delta_table(
         partition_by,
         column_mapping=prior.column_mapping if prior else None,
     )
+    new_meta = {
+        "schema": df.schema,
+        "partition_columns": partition_by,
+        "configuration": {},
+    }
 
-    schema_json = df.schema.json()
-    for attempt in range(max_retries):
-        versions = _list_log_versions(table_path)
-        next_version = (versions[-1] + 1) if versions else 0
-        if txn_app_id is not None and attempt > 0 and versions:
-            # we lost a race — the winner may have been our own replay
-            committed = read_delta_snapshot(table_path).app_versions.get(
-                txn_app_id
-            )
-            if committed is not None and committed >= int(txn_version):
-                return None
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": mode.upper()},
-                }
-            }
-        ]
-        if next_version == 0:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": MAX_WRITER_VERSION,
-                    }
-                }
-            )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema_json,
-                        "partitionColumns": partition_by,
-                        "configuration": {},
-                        "createdTime": _now_ms(),
-                    }
-                }
-            )
-        else:
-            prev = read_delta_snapshot(table_path)
-            _check_writer_protocol(
-                prev,
-                "WRITE",
-                adds_rows=True,
-                removes_rows=(mode == "overwrite"),
-            )
-            # compare names + types; nullability differences (literal
-            # columns are non-nullable) don't constitute schema change
-            shape = lambda sch: [(f.name, f.dataType) for f in sch.fields]  # noqa: E731
-            if shape(prev.schema) != shape(df.schema) or (
-                prev.partition_columns != partition_by
-            ):
-                if mode != "overwrite":
-                    raise ValueError(
-                        "schema/partitioning mismatch with existing table "
-                        "(append requires identical schema; use overwrite)"
-                    )
-                if prev.column_mapping:
-                    raise DeltaProtocolError(
-                        "overwrite with a schema/partitioning change on a "
-                        "column-mapped table would replace metaData and "
-                        "drop the mapping — ALTER the schema first, then "
-                        "overwrite with the matching shape"
-                    )
-                actions.append(
-                    {
-                        "metaData": {
-                            # overwrite replaces data, not table identity
-                            "id": prev.table_id or str(uuid.uuid4()),
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": schema_json,
-                            "partitionColumns": partition_by,
-                            "configuration": {},
-                            "createdTime": _now_ms(),
-                        }
-                    }
+    def plan(snap: DeltaSnapshot | None) -> dict:
+        if snap is None:
+            return new_meta
+        _check_writer_protocol(
+            snap, "WRITE", adds_rows=True, removes_rows=(mode == "overwrite")
+        )
+        if mode == "overwrite":
+            # an overwrite read the whole table: a file committed since
+            # would outlive it, which no serial order of the two gives
+            read = {f.path for f in prior.files} if prior else set()
+            if any(f.path not in read for f in snap.files):
+                raise DeltaConcurrentCommitError(
+                    f"WRITE overwrite: files were added by a concurrent "
+                    f"commit (table now at version {snap.version}); rerun "
+                    f"on the new snapshot"
                 )
-            if mode == "overwrite":
-                ts = _now_ms()
-                for old in prev.files:
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": old.path,
-                                "deletionTimestamp": ts,
-                                "dataChange": True,
-                            }
-                        }
-                    )
-        if txn_app_id is not None:
-            actions.append(
-                {
-                    "txn": {
-                        "appId": txn_app_id,
-                        "version": int(txn_version),
-                        "lastUpdated": _now_ms(),
-                    }
-                }
-            )
-        actions.extend(adds)
-        try:
-            _attempt_commit(table_path, next_version, actions)
-        except FileExistsError:
-            continue  # lost the race: recompute against the new log tail
-        if checkpoint_interval and next_version > 0 and (
-            next_version % checkpoint_interval == 0
+        # compare names + types; nullability differences (literal
+        # columns are non-nullable) don't constitute schema change
+        shape = lambda sch: [(f.name, f.dataType) for f in sch.fields]  # noqa: E731
+        if shape(snap.schema) == shape(df.schema) and (
+            snap.partition_columns == partition_by
         ):
-            _write_checkpoint(table_path, next_version)
-        return next_version
-    raise DeltaConcurrentCommitError(
-        f"lost the commit race {max_retries} times at {table_path!r}"
+            return {}
+        if mode != "overwrite":
+            raise ValueError(
+                "schema/partitioning mismatch with existing table "
+                "(append requires identical schema; use overwrite)"
+            )
+        if snap.column_mapping:
+            raise DeltaProtocolError(
+                "overwrite with a schema/partitioning change on a "
+                "column-mapped table would replace metaData and "
+                "drop the mapping — ALTER the schema first, then "
+                "overwrite with the matching shape"
+            )
+        return new_meta
+
+    return _commit(
+        table_path,
+        prior,
+        "WRITE",
+        {"mode": mode.upper()},
+        plan=plan,
+        remove=prior.files if prior is not None and mode == "overwrite" else (),
+        add=adds,
+        txn=txn,
     )
+
+
+def _is_mapped(snap: DeltaSnapshot) -> bool:
+    return snap.configuration.get("delta.columnMapping.mode") in ("name", "id")
 
 
 def alter_delta_table(
@@ -1604,120 +1694,88 @@ def alter_delta_table(
     drop_columns = list(drop_columns or [])
     if not add_columns and not drop_columns:
         raise ValueError("ALTER needs add_columns and/or drop_columns")
-    for _attempt in range(10):
-        result = _alter_once(table_path, add_columns, drop_columns)
-        if result is not None:
-            return result
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
 
-
-def _alter_once(
-    table_path: str, add_columns: dict, drop_columns: list[str]
-) -> int | None:
-    """One ALTER attempt built against the LIVE snapshot (so a raced
-    concurrent ALTER's schema is never clobbered); None = lost the
-    commit race, recompute and retry."""
-    snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(snap, "ALTER")
-    mapped = snap.configuration.get("delta.columnMapping.mode") in (
-        "name", "id"
-    )
-    names = {f.name for f in snap.schema.fields}
-    dropped = set(json.loads(
-        snap.configuration.get("ballista.droppedColumns", "[]")
-    ))
-    for c in add_columns:
-        if c in names:
-            raise ValueError(f"column {c!r} already exists")
-        if c in dropped and not mapped:
-            # the unmapped reader projects parquet by NAME: re-adding a
-            # dropped name would RESURRECT the old physical data in
-            # pre-drop files (the reason delta-spark gates DROP behind
-            # column mapping).  Rewrite the files first, then the name
-            # frees up.  Mapped tables are immune: a re-added name gets
-            # a FRESH physical name, so old file data stays invisible.
-            raise ValueError(
-                f"column {c!r} was previously dropped and its name is "
-                "retired; re-adding it would resurrect old file data. "
-                "Use a new name (the Iceberg field-id discipline, "
-                "spelled in names), or enable_column_mapping() first"
-            )
-    for c in drop_columns:
-        if c not in names:
-            raise ValueError(f"column {c!r} does not exist")
-        if c in snap.partition_columns:
-            raise ValueError(f"cannot drop partition column {c!r}")
-        if c in add_columns:
-            raise ValueError(f"column {c!r} both added and dropped")
-    fields = [
-        f for f in snap.schema.fields if f.name not in set(drop_columns)
-    ]
-    config = dict(snap.configuration)
-    if mapped:
-        # new columns join the mapping: fresh id (never reused) + a
-        # fresh physical name, delta-spark's col-<uuid> convention
-        max_id = max(
-            [int(config.get("delta.columnMapping.maxColumnId", 0))]
-            + [
-                int((f.metadata or {}).get("delta.columnMapping.id", 0))
-                for f in snap.schema.fields
-            ]
-        )
-        for c, t in add_columns.items():
-            max_id += 1
-            fields.append(
-                T.StructField(
-                    c,
-                    T._parse_datatype_string(t),  # noqa: SLF001
-                    True,
-                    metadata={
-                        "delta.columnMapping.id": max_id,
-                        "delta.columnMapping.physicalName": (
-                            f"col-{uuid.uuid4().hex[:16]}"
-                        ),
-                    },
+    def plan(snap: DeltaSnapshot) -> dict:
+        # built against the snapshot it commits on, so a raced
+        # concurrent ALTER's schema is never clobbered
+        _check_writer_protocol(snap, "ALTER")
+        mapped = _is_mapped(snap)
+        names = {f.name for f in snap.schema.fields}
+        dropped = set(json.loads(
+            snap.configuration.get("ballista.droppedColumns", "[]")
+        ))
+        for c in add_columns:
+            if c in names:
+                raise ValueError(f"column {c!r} already exists")
+            if c in dropped and not mapped:
+                # the unmapped reader projects parquet by NAME: re-adding a
+                # dropped name would RESURRECT the old physical data in
+                # pre-drop files (the reason delta-spark gates DROP behind
+                # column mapping).  Rewrite the files first, then the name
+                # frees up.  Mapped tables are immune: a re-added name gets
+                # a FRESH physical name, so old file data stays invisible.
+                raise ValueError(
+                    f"column {c!r} was previously dropped and its name is "
+                    "retired; re-adding it would resurrect old file data. "
+                    "Use a new name (the Iceberg field-id discipline, "
+                    "spelled in names), or enable_column_mapping() first"
                 )
-            )
-        config["delta.columnMapping.maxColumnId"] = str(max_id)
-    else:
-        fields += [
-            T.StructField(c, T._parse_datatype_string(t), True)  # noqa: SLF001
-            for c, t in add_columns.items()
+        for c in drop_columns:
+            if c not in names:
+                raise ValueError(f"column {c!r} does not exist")
+            if c in snap.partition_columns:
+                raise ValueError(f"cannot drop partition column {c!r}")
+            if c in add_columns:
+                raise ValueError(f"column {c!r} both added and dropped")
+        fields = [
+            f for f in snap.schema.fields if f.name not in set(drop_columns)
         ]
-        config["ballista.droppedColumns"] = json.dumps(
-            sorted(dropped | set(drop_columns))
-        )
-    if not fields:
-        raise ValueError("cannot drop every column")
-    new_schema = T.StructType(fields)
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "ALTER TABLE",
-                "operationParameters": {
-                    "added": json.dumps(add_columns),
-                    "dropped": json.dumps(drop_columns),
-                },
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.table_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": new_schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-                "createdTime": _now_ms(),
-            }
-        },
-    ]
-    versions = _list_log_versions(table_path)
-    try:
-        _attempt_commit(table_path, versions[-1] + 1, actions)
-        return versions[-1] + 1
-    except FileExistsError:
-        return None
+        config = dict(snap.configuration)
+        if mapped:
+            # new columns join the mapping: fresh id (never reused) + a
+            # fresh physical name, delta-spark's col-<uuid> convention
+            max_id = max(
+                [int(config.get("delta.columnMapping.maxColumnId", 0))]
+                + [
+                    int((f.metadata or {}).get("delta.columnMapping.id", 0))
+                    for f in snap.schema.fields
+                ]
+            )
+            for c, t in add_columns.items():
+                max_id += 1
+                fields.append(
+                    T.StructField(
+                        c,
+                        T._parse_datatype_string(t),  # noqa: SLF001
+                        True,
+                        metadata={
+                            "delta.columnMapping.id": max_id,
+                            "delta.columnMapping.physicalName": (
+                                f"col-{uuid.uuid4().hex[:16]}"
+                            ),
+                        },
+                    )
+                )
+            config["delta.columnMapping.maxColumnId"] = str(max_id)
+        else:
+            fields += [
+                T.StructField(c, T._parse_datatype_string(t), True)  # noqa: SLF001
+                for c, t in add_columns.items()
+            ]
+            config["ballista.droppedColumns"] = json.dumps(
+                sorted(dropped | set(drop_columns))
+            )
+        if not fields:
+            raise ValueError("cannot drop every column")
+        return {"schema": T.StructType(fields), "configuration": config}
+
+    return _commit(
+        table_path,
+        read_delta_snapshot(table_path),
+        "ALTER TABLE",
+        {"added": json.dumps(add_columns), "dropped": json.dumps(drop_columns)},
+        plan=plan,
+    )
 
 
 def enable_column_mapping(table_path: str) -> int | None:
@@ -1736,12 +1794,10 @@ def enable_column_mapping(table_path: str) -> int | None:
     enumerated, per the table-features spec).  Mapping cannot be
     DISABLED once on (protocol rule) — there is deliberately no
     inverse."""
-    for _attempt in range(10):
-        snap = read_delta_snapshot(table_path)
+
+    def plan(snap: DeltaSnapshot) -> dict | None:
         _check_writer_protocol(snap, "ALTER")
-        if snap.configuration.get("delta.columnMapping.mode") in (
-            "name", "id"
-        ):
+        if _is_mapped(snap):
             return None
         fields = []
         for i, f in enumerate(snap.schema.fields, 1):
@@ -1754,62 +1810,29 @@ def enable_column_mapping(table_path: str) -> int | None:
         config = dict(snap.configuration)
         config["delta.columnMapping.mode"] = "name"
         config["delta.columnMapping.maxColumnId"] = str(len(fields))
-        proto = dict(
-            snap.protocol
-            or {"minReaderVersion": 1, "minWriterVersion": MAX_WRITER_VERSION}
-        )
+        proto = snap.protocol or _DEFAULT_PROTOCOL
         mrv = int(proto.get("minReaderVersion", 1))
         mwv = int(proto.get("minWriterVersion", 1))
         if mwv == 7 or mrv >= 3:
-            rf = set(proto.get("readerFeatures") or [])
-            wf = set(proto.get("writerFeatures") or [])
-            rf |= _LEGACY_READER_FEATURES.get(mrv, frozenset())
-            wf |= _LEGACY_WRITER_FEATURES.get(mwv, frozenset())
-            new_proto = {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(rf | {"columnMapping"}),
-                "writerFeatures": sorted(wf | {"columnMapping"}),
-            }
+            new_proto = _protocol_with_table_feature(proto, "columnMapping")
         else:
             new_proto = {
                 "minReaderVersion": max(mrv, 2),
                 "minWriterVersion": max(mwv, 5),
             }
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps(
-                            {"delta.columnMapping.mode": "name"}
-                        )
-                    },
-                }
-            }
-        ]
-        if new_proto != proto:
-            actions.append({"protocol": new_proto})
-        actions.append(
-            {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": T.StructType(fields).json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": config,
-                    "createdTime": _now_ms(),
-                }
-            }
-        )
-        versions = _list_log_versions(table_path)
-        try:
-            _attempt_commit(table_path, versions[-1] + 1, actions)
-            return versions[-1] + 1
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+        return {
+            "schema": T.StructType(fields),
+            "configuration": config,
+            "protocol": new_proto,
+        }
+
+    return _commit(
+        table_path,
+        read_delta_snapshot(table_path),
+        "SET TBLPROPERTIES",
+        {"properties": json.dumps({"delta.columnMapping.mode": "name"})},
+        plan=plan,
+    )
 
 
 #: table properties whose semantics ride on a writer feature — SETTING
@@ -1821,6 +1844,28 @@ _PROPERTY_WRITER_REQUIREMENTS = {
 }
 
 
+def _protocol_with_table_feature(proto: dict | None, feature: str) -> dict:
+    """The reader-3/writer-7 protocol declaring ``feature`` on top of
+    ``proto``.  The upgrade must ENUMERATE the features the old legacy
+    versions implied (spec: table features) on both sides —
+    _check_writer_protocol already refused any this writer can't honor,
+    and a minReaderVersion=2 (column-mapped) table must keep declaring
+    columnMapping, or other readers would scan physical names unmapped."""
+    proto = proto or _DEFAULT_PROTOCOL
+    rf = set(proto.get("readerFeatures") or []) | _LEGACY_READER_FEATURES.get(
+        int(proto.get("minReaderVersion", 1)), frozenset()
+    )
+    wf = set(proto.get("writerFeatures") or []) | _LEGACY_WRITER_FEATURES.get(
+        int(proto.get("minWriterVersion", 1)), frozenset()
+    )
+    return {
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": sorted(rf | {feature}),
+        "writerFeatures": sorted(wf | {feature}),
+    }
+
+
 def _protocol_with_writer_requirement(
     proto: dict | None, legacy_version: int, feature: str
 ) -> dict:
@@ -1828,9 +1873,7 @@ def _protocol_with_writer_requirement(
     minWriterVersion bump when the table is pre-table-features, or the
     feature added to an enumerated v7 list (implied legacy features
     spelled out, per the spec)."""
-    proto = dict(
-        proto or {"minReaderVersion": 1, "minWriterVersion": MAX_WRITER_VERSION}
-    )
+    proto = dict(proto or _DEFAULT_PROTOCOL)
     mrv = int(proto.get("minReaderVersion", 1))
     mwv = int(proto.get("minWriterVersion", 1))
     if mwv == 7:
@@ -1870,56 +1913,29 @@ def set_delta_table_properties(
                 "enable_column_mapping() (and mapping cannot be "
                 "disabled once on, per the protocol)"
             )
-    for _attempt in range(10):
-        snap = read_delta_snapshot(table_path)
+
+    def plan(snap: DeltaSnapshot) -> dict:
         _check_writer_protocol(snap, "ALTER")
         config = dict(snap.configuration)
         for k in unset:
             config.pop(k, None)
         config.update(set_props)
-        proto = dict(snap.protocol or {})
-        new_proto = dict(proto) if proto else None
+        proto = snap.protocol
         for k in set_props:
             req = _PROPERTY_WRITER_REQUIREMENTS.get(k)
             if req is None and k.startswith("delta.constraints."):
                 req = (3, "checkConstraints")
             if req is not None:
-                new_proto = _protocol_with_writer_requirement(
-                    new_proto if new_proto else proto, *req
-                )
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps(set_props),
-                        "unset": json.dumps(unset),
-                    },
-                }
-            }
-        ]
-        if new_proto and new_proto != proto:
-            actions.append({"protocol": new_proto})
-        actions.append(
-            {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": config,
-                    "createdTime": _now_ms(),
-                }
-            }
-        )
-        versions = _list_log_versions(table_path)
-        try:
-            _attempt_commit(table_path, versions[-1] + 1, actions)
-            return versions[-1] + 1
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+                proto = _protocol_with_writer_requirement(proto, *req)
+        return {"configuration": config, "protocol": proto}
+
+    return _commit(
+        table_path,
+        read_delta_snapshot(table_path),
+        "SET TBLPROPERTIES",
+        {"properties": json.dumps(set_props), "unset": json.dumps(unset)},
+        plan=plan,
+    )
 
 
 def rename_delta_column(table_path: str, old: str, new: str) -> int:
@@ -1932,14 +1948,13 @@ def rename_delta_column(table_path: str, old: str, new: str) -> int:
     sees the old name.  Returns the rename's commit version."""
     if old == new:
         raise ValueError("rename to the same name is a no-op")
-    for _attempt in range(10):
+    snap = read_delta_snapshot(table_path)
+    if not _is_mapped(snap):
+        enable_column_mapping(table_path)
         snap = read_delta_snapshot(table_path)
+
+    def plan(snap: DeltaSnapshot) -> dict:
         _check_writer_protocol(snap, "ALTER")
-        if snap.configuration.get("delta.columnMapping.mode") not in (
-            "name", "id"
-        ):
-            enable_column_mapping(table_path)
-            snap = read_delta_snapshot(table_path)
         names = [f.name for f in snap.schema.fields]
         if old not in names:
             raise ValueError(f"column {old!r} does not exist")
@@ -1954,34 +1969,16 @@ def rename_delta_column(table_path: str, old: str, new: str) -> int:
             )
             for f in snap.schema.fields
         ]
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "RENAME COLUMN",
-                    "operationParameters": {"from": old, "to": new},
-                }
-            },
-            {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": T.StructType(fields).json(),
-                    "partitionColumns": [
-                        new if c == old else c for c in snap.partition_columns
-                    ],
-                    "configuration": dict(snap.configuration),
-                    "createdTime": _now_ms(),
-                }
-            },
-        ]
-        versions = _list_log_versions(table_path)
-        try:
-            _attempt_commit(table_path, versions[-1] + 1, actions)
-            return versions[-1] + 1
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+        return {
+            "schema": T.StructType(fields),
+            "partition_columns": [
+                new if c == old else c for c in snap.partition_columns
+            ],
+        }
+
+    return _commit(
+        table_path, snap, "RENAME COLUMN", {"from": old, "to": new}, plan=plan
+    )
 
 
 def _write_checkpoint(table_path: str, version: int) -> None:
@@ -1996,10 +1993,7 @@ def _write_checkpoint(table_path: str, version: int) -> None:
     # republish the table's ACTUAL protocol: writing a default here
     # would downgrade a v3 (columnMapping/deletionVectors) table's
     # declared requirements for every reader starting at the checkpoint
-    proto = snap.protocol or {
-        "minReaderVersion": 1,
-        "minWriterVersion": MAX_WRITER_VERSION,
-    }
+    proto = snap.protocol or _DEFAULT_PROTOCOL
     rows = [
         {
             **blank,
@@ -2110,13 +2104,17 @@ def _write_checkpoint(table_path: str, version: int) -> None:
     for r in rows:
         if r["add"] is not None:
             r["add"]["partitionValues"] = list(r["add"]["partitionValues"].items())
-    table = pa.Table.from_pylist(rows, schema=schema)
-    cp_path = _checkpoint_paths(table_path, version, None)[0]
-    with fsio.open_output(cp_path) as sink:
-        pq.write_table(table, sink)
-    fsio.write_text(
+    sink = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), sink)
+    # published whole, parquet before pointer: a reader never follows
+    # _last_checkpoint to a missing or partial checkpoint
+    fsio.publish_bytes(
+        _checkpoint_paths(table_path, version, None)[0],
+        sink.getvalue().to_pybytes(),
+    )
+    fsio.publish_bytes(
         os.path.join(_log_dir(table_path), "_last_checkpoint"),
-        json.dumps({"version": version, "size": len(rows)}),
+        json.dumps({"version": version, "size": len(rows)}).encode(),
     )
 
 
@@ -2275,44 +2273,16 @@ def compact_delta_table(
             _rewrite(group, key, shaped)
     if not adds:
         return None
-    ts = _now_ms()
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetSize": str(target_file_bytes)
-                },
-            }
-        }
-    ]
-    for old in removes:
-        actions.append(
-            {
-                "remove": {
-                    "path": old.path,
-                    "deletionTimestamp": ts,
-                    "dataChange": False,
-                }
-            }
-        )
-    actions.extend(adds)
-    for _attempt in range(10):
-        versions = _list_log_versions(table_path)
-        next_version = versions[-1] + 1
-        try:
-            _attempt_commit(table_path, next_version, actions)
-            return next_version
-        except FileExistsError:
-            # a writer landed mid-compaction; only safe if OUR inputs are
-            # all still live (no lost update) — re-check and retry
-            live = {f.path for f in read_delta_snapshot(table_path).files}
-            if not all(old.path in live for old in removes):
-                raise DeltaConcurrentCommitError(
-                    "compaction inputs were removed concurrently; rerun"
-                ) from None
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+    # dataChange:false — the table's rows are unchanged
+    return _commit(
+        table_path,
+        snap,
+        "OPTIMIZE",
+        {"targetSize": str(target_file_bytes)},
+        remove=removes,
+        add=adds,
+        data_change=False,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2405,17 +2375,15 @@ def merge_delta_table(
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version go together")
     on = list(on)
+    txn = None if txn_app_id is None else (txn_app_id, int(txn_version))
     snap = read_delta_snapshot(table_path)
     _check_writer_protocol(
         snap, "MERGE", adds_rows=True, removes_rows=True
     )
-    if txn_app_id is not None:
-        # streaming-upsert idempotence (the Delta `txn` action): a
-        # replayed epoch is detected in the log and skipped before any
-        # file is staged
-        committed = snap.app_versions.get(txn_app_id)
-        if committed is not None and committed >= int(txn_version):
-            return None
+    if _replayed(snap, txn):
+        # streaming-upsert idempotence: a replayed epoch is skipped
+        # before any file is staged
+        return None
     if when_matched == "update" or insert_not_matched:
         # names + types must match; nullability may differ (literals are
         # non-nullable, table columns usually nullable — irrelevant here)
@@ -2513,65 +2481,21 @@ def merge_delta_table(
     source.unpersist()
     if not adds and not touched:
         return None
-
-    ts = _now_ms()
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "predicate": ",".join(on),
-                    "matchedAction": when_matched,
-                },
-            }
-        }
-    ]
-    if txn_app_id is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn_app_id,
-                    "version": int(txn_version),
-                    "lastUpdated": ts,
-                }
-            }
-        )
-    for old in touched:
-        actions.append(
-            {
-                "remove": {
-                    "path": old.path,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                }
-            }
-        )
-    actions.extend(adds)
-    for _attempt in range(10):
-        versions = _list_log_versions(table_path)
-        next_version = versions[-1] + 1
-        try:
-            _attempt_commit(table_path, next_version, actions)
-            return next_version
-        except FileExistsError:
-            new_snap = read_delta_snapshot(table_path)
-            if txn_app_id is not None:
-                committed = new_snap.app_versions.get(txn_app_id)
-                if committed is not None and committed >= int(txn_version):
-                    return None  # the race loser WAS our replayed epoch
-            live = {f.path for f in new_snap.files}
-            if not all(old.path in live for old in touched):
-                raise DeltaConcurrentCommitError(
-                    "merge inputs were removed concurrently; rerun on the "
-                    "new snapshot"
-                ) from None
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+    return _commit(
+        table_path,
+        snap,
+        "MERGE",
+        {"predicate": ",".join(on), "matchedAction": when_matched},
+        remove=touched,
+        add=adds,
+        txn=txn,
+    )
 
 
 def _filters_to_column(filters: list[tuple[str, str, object]]):
     """AND of (col, op, value) triples as a real row predicate — the
-    exact-match twin of the proof language `_file_may_match` prunes on."""
+    exact-match twin of the proof language `_file_may_match` prunes on
+    (Delta and Iceberg DML both use it)."""
     cond = F.lit(True)
     for col, op, val in filters:
         c = F.col(col)
@@ -2623,57 +2547,6 @@ def _touched_files(
     for r in probe.collect():
         touched_rel.add(_normalize_rel(snap.table_path, r["__file"]))
     return [f for f in snap.files if f.path in touched_rel]
-
-
-def _commit_rewrite(
-    table_path: str,
-    touched: list[_AddFile],
-    adds: list[dict],
-    operation: str,
-    parameters: dict,
-    pre_actions: list[dict] | None = None,
-) -> int:
-    """remove(touched)+add(new) as ONE exclusive-create commit, with the
-    merge-path race handling: a concurrent commit that removed one of
-    our touched files aborts (rerun on the new snapshot).
-    ``pre_actions`` prepend after commitInfo (the DV-delete path's
-    protocol upgrade)."""
-    ts = _now_ms()
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": operation,
-                "operationParameters": parameters,
-            }
-        }
-    ]
-    actions.extend(pre_actions or [])
-    for old in touched:
-        actions.append(
-            {
-                "remove": {
-                    "path": old.path,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                }
-            }
-        )
-    actions.extend(adds)
-    for _attempt in range(10):
-        versions = _list_log_versions(table_path)
-        next_version = versions[-1] + 1
-        try:
-            _attempt_commit(table_path, next_version, actions)
-            return next_version
-        except FileExistsError:
-            live = {f.path for f in read_delta_snapshot(table_path).files}
-            if not all(old.path in live for old in touched):
-                raise DeltaConcurrentCommitError(
-                    f"{operation.lower()} inputs were removed concurrently; "
-                    "rerun on the new snapshot"
-                ) from None
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
 
 
 def delete_from_delta_table(
@@ -2746,12 +2619,13 @@ def delete_from_delta_table(
         data_change=True,
         column_mapping=snap.column_mapping,
     )
-    return _commit_rewrite(
+    return _commit(
         table_path,
-        touched,
-        adds,
+        snap,
         "DELETE",
         {"predicate": json.dumps([list(map(str, f)) for f in filters])},
+        remove=touched,
+        add=adds,
     )
 
 
@@ -2932,44 +2806,27 @@ def _delete_with_deletion_vectors(
         fsio.write_bytes(
             f"{table_path.rstrip('/')}/deletion_vector_{u}.bin", bytes(blob)
         )
-    pre_actions: list[dict] = []
-    if "deletionVectors" not in snap.reader_features:
-        proto = dict(snap.protocol or {})
-        rf = set(proto.get("readerFeatures") or [])
-        wf = set(proto.get("writerFeatures") or [])
-        # upgrading to v7 writers must ENUMERATE the legacy features the
-        # old minWriterVersion implied (spec: table features) — the full
-        # 1-6 map; _check_writer_protocol already refused any implied
-        # feature this writer couldn't honor
-        wf |= _LEGACY_WRITER_FEATURES.get(
-            int(proto.get("minWriterVersion", 2)), frozenset()
-        )
-        # same on the reader side: a minReaderVersion=2 (column-mapped)
-        # table upgraded to 3 must keep declaring columnMapping, or
-        # other readers would scan physical names unmapped
-        rf |= _LEGACY_READER_FEATURES.get(
-            int(proto.get("minReaderVersion", 1)), frozenset()
-        )
-        pre_actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(rf | {"deletionVectors"}),
-                    "writerFeatures": sorted(wf | {"deletionVectors"}),
-                }
-            }
-        )
-    return _commit_rewrite(
+
+    def plan(s: DeltaSnapshot) -> dict:
+        if "deletionVectors" in s.reader_features:
+            return {}
+        return {
+            "protocol": _protocol_with_table_feature(
+                s.protocol, "deletionVectors"
+            )
+        }
+
+    return _commit(
         table_path,
-        removes,
-        adds,
+        snap,
         "DELETE",
         {
             "predicate": json.dumps([list(map(str, f)) for f in filters]),
             "deletionVectors": "true",
         },
-        pre_actions=pre_actions,
+        plan=plan,
+        remove=removes,
+        add=adds,
     )
 
 
@@ -3040,10 +2897,9 @@ def update_delta_table(
         data_change=True,
         column_mapping=snap.column_mapping,
     )
-    return _commit_rewrite(
+    return _commit(
         table_path,
-        touched,
-        adds,
+        snap,
         "UPDATE",
         {
             "predicate": json.dumps(
@@ -3051,6 +2907,8 @@ def update_delta_table(
             ),
             "set": json.dumps({k: str(v) for k, v in set_exprs.items()}),
         },
+        remove=touched,
+        add=adds,
     )
 
 

@@ -22,9 +22,10 @@ this module via pyarrow's builtin s3/gcs/azure/hdfs clients or a
 registered custom filesystem).
 
 Atomicity (the Delta LogStore pattern, now pluggable): commits need
-put-if-absent.  Local filesystems get true ``open(..., "x")``
-exclusive-create.  Object stores have no portable primitive — pyarrow
-exposes none — so deployments register a :class:`LogStore` (atomic
+put-if-absent, published whole.  Local filesystems hard-link a fully
+written temp into place (the link is the exclusive create).  Object
+stores have no portable primitive — pyarrow exposes none — so
+deployments register a :class:`LogStore` (atomic
 put-if-absent over DynamoDB, conditional PUT, a database row, …) via
 :func:`register_log_store`; every lakehouse commit for that scheme
 routes through it.  :class:`SqliteLogStore` ships as the reference
@@ -44,6 +45,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import uuid
 import warnings
 
 __all__ = [
@@ -57,6 +59,7 @@ __all__ = [
     "read_text",
     "write_bytes",
     "write_text",
+    "publish_bytes",
     "create_exclusive",
     "open_input",
     "open_output",
@@ -121,13 +124,21 @@ class LogStore:
 
 
 class _LocalLogStore(LogStore):
-    """Local filesystems get true atomic ``open(..., "x")``."""
+    """Local filesystems: the bytes go to a temp sibling first, then
+    ``os.link`` publishes it — the link is the atomic exclusive create,
+    and it makes the path visible with every byte already written (an
+    ``open(..., "x")`` + write would show readers an empty file)."""
 
     def put_if_absent(self, path: str, data: bytes) -> None:
         p = _strip_file(path)
         os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
-        with open(p, "xb") as f:
+        tmp = f"{p}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "xb") as f:
             f.write(data)
+        try:
+            os.link(tmp, p)
+        finally:
+            os.remove(tmp)
 
 
 class SqliteLogStore(LogStore):
@@ -146,16 +157,16 @@ class SqliteLogStore(LogStore):
     Commit protocol (crash-safe write-ahead):
 
     1. STAGE  — write ``data`` to ``<path>.tmp-<uuid>`` on the target
-       store (a same-store sibling, so publish is a cheap copy).
+       store (a same-store sibling, so publish is a rename).
     2. CLAIM  — atomically INSERT the path, recording the temp name.
        Exactly one concurrent writer succeeds; losers raise
        ``FileExistsError``.
-    3. PUBLISH — copy temp → final path, mark the claim complete,
-       drop the temp.
+    3. PUBLISH — rename the whole temp onto the final path, mark the
+       claim complete.  A reader never sees a partial commit file.
 
     A winner crashing between CLAIM and PUBLISH leaves the slot
     claimed but unpublished; ANY later ``put_if_absent`` on that path
-    first COMPLETES the recorded winner (copies its temp into place)
+    first COMPLETES the recorded winner (renames its temp into place)
     before raising ``FileExistsError`` — a crashed writer never wedges
     the log, exactly the recovery rule the DynamoDB LogStore
     documents."""
@@ -182,11 +193,10 @@ class SqliteLogStore(LogStore):
 
     def put_if_absent(self, path: str, data: bytes) -> None:
         import sqlite3
-        import uuid as _uuid
 
         if exists(path):  # fast path: slot visibly taken
             raise FileExistsError(path)
-        tmp = f"{path}.tmp-{_uuid.uuid4().hex}"
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
         write_bytes(tmp, data)  # STAGE
         con = self._connect()
         try:
@@ -200,55 +210,22 @@ class SqliteLogStore(LogStore):
             except sqlite3.IntegrityError:
                 remove(tmp, missing_ok=True)
                 # losers must ALWAYS report the slot taken; recovery of
-                # a crashed winner is best-effort on top (review
-                # finding: a live winner finishing mid-recovery must
-                # not surface as FileNotFoundError)
+                # a crashed winner is best-effort on top
                 try:
                     self._recover(con, path)
                 finally:
                     raise FileExistsError(path) from None
+            # the claim won.  An object already at the path is either
+            # OUR temp, published by a racing loser's _recover (the
+            # commit stands), or a commit made outside this store
+            # (warn-mode history, a rebuilt db) that put-if-absent must
+            # not clobber.  Publishes are renames of whole temps, so one
+            # read tells the two apart.
+            ours = True
             if exists(path):
-                # the claim won but the OBJECT already exists.  Two
-                # cases (review finding — they must not be conflated):
-                # (a) a racing LOSER ran _recover and completed OUR
-                #     claim from OUR staged temp — the bytes are ours,
-                #     the commit STANDS, report success;
-                # (b) a commit published outside this store (warn-mode
-                #     history, a rebuilt db) slipped in between the
-                #     fast pre-check and the claim — honor
-                #     put-if-absent, never clobber committed history.
-                # the read must tolerate racing a LIVE loser's _recover
-                # mid-publish: write_bytes makes the path visible at
-                # open time (empty/partial until close) on both the
-                # posix and mock filesystems, so a single read here can
-                # observe torn bytes and misclassify OUR OWN published
-                # commit as foreign — observed once as an all-losers
-                # outcome in the 12-writer race test under heavy host
-                # load (r11).  Only in-protocol writers exist for a
-                # claimed path and they all carry OUR staged bytes, so
-                # retry briefly before deciding; a durably-foreign
-                # object (case b) still refuses after ~0.1 s.
-                published_ours = False
-                for _ in range(5):
-                    try:
-                        published_ours = read_bytes(path) == data
-                    except OSError:
-                        published_ours = False
-                    if published_ours:
-                        break
-                    import time as _t
-
-                    _t.sleep(0.02)
-                with con:
-                    con.execute(
-                        "UPDATE commits SET complete = 1 WHERE path = ?",
-                        (path,),
-                    )
-                remove(tmp, missing_ok=True)
-                if published_ours:
-                    return
-                raise FileExistsError(path)
-            write_bytes(path, data)  # PUBLISH
+                ours = read_bytes(path) == data
+            else:
+                self._publish(tmp, path)  # PUBLISH
             with con:
                 con.execute(
                     "UPDATE commits SET complete = 1 WHERE path = ?", (path,)
@@ -256,33 +233,35 @@ class SqliteLogStore(LogStore):
         finally:
             con.close()
         remove(tmp, missing_ok=True)
+        if not ours:
+            raise FileExistsError(path)
+
+    @staticmethod
+    def _publish(tmp: str, path: str) -> None:
+        """Rename the fully staged ``tmp`` onto ``path``.  The winner and
+        a recovering loser may race to do it; the one that finds the
+        temp gone lost to the other, and the path holds the bytes."""
+        try:
+            move(tmp, path)
+        except FileNotFoundError:
+            pass
 
     def _recover(self, con, path: str) -> None:
         """Complete a claimed-but-unpublished commit (winner crashed
-        between CLAIM and PUBLISH) so later readers see it.  Tolerates
-        racing the LIVE winner: if its temp vanishes mid-copy the
-        winner published (or is about to) — either way the slot is
-        taken and there is nothing left to complete."""
+        between CLAIM and PUBLISH) so later readers see it.  The claim
+        row exists only once the temp is fully staged."""
         row = con.execute(
             "SELECT tmp, complete FROM commits WHERE path = ?", (path,)
         ).fetchone()
         if row is None or row[1]:
             return
-        tmp = row[0]
         if not exists(path):
-            if not exists(tmp):
-                return  # winner still mid-stage; nothing to complete yet
-            try:
-                staged = read_bytes(tmp)
-            except (FileNotFoundError, OSError):
-                return  # live winner just published and reaped its temp
-            if not exists(path):  # re-check: don't clobber the winner
-                write_bytes(path, staged)
+            self._publish(row[0], path)
         with con:
             con.execute(
                 "UPDATE commits SET complete = 1 WHERE path = ?", (path,)
             )
-        remove(tmp, missing_ok=True)
+        remove(row[0], missing_ok=True)
 
 
 #: scheme -> LogStore; local paths always use _LocalLogStore
@@ -415,9 +394,20 @@ def write_text(path: str, text: str, encoding: str = "utf-8") -> None:
     write_bytes(path, text.encode(encoding))
 
 
+def publish_bytes(path: str, data: bytes) -> None:
+    """Replace ``path`` with ``data`` whole: write a temp sibling, then
+    rename it over the path, so a reader sees the old bytes or the new
+    ones — never the empty or partial file :func:`write_bytes` shows
+    while it writes."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    write_bytes(tmp, data)
+    move(tmp, path)
+
+
 def create_exclusive(path: str, data: bytes) -> None:
     """Put-if-absent: raises FileExistsError when ``path`` exists.
-    Atomic on local filesystems (``open(..., "x")``) and through any
+    Atomic and whole on local filesystems (a temp hard-linked into
+    place) and through any
     :func:`register_log_store`-registered coordinator (ship-with
     reference: :class:`SqliteLogStore`); otherwise REFUSED by default
     (``strict``) — ``set_commit_mode("warn")`` opts into single-writer
@@ -451,7 +441,7 @@ def create_exclusive(path: str, data: bytes) -> None:
         )
     if exists(path):
         raise FileExistsError(path)
-    write_bytes(path, data)
+    publish_bytes(path, data)
 
 
 def open_input(path: str):
@@ -554,7 +544,7 @@ def move(src: str, dst: str) -> None:
     dfs, dp = _resolve(dst)
     if sfs is None and dfs is None:
         os.makedirs(os.path.dirname(dp) or ".", exist_ok=True)
-        os.rename(sp, dp)
+        os.replace(sp, dp)  # overwrites an existing dst on every platform
         return
     if sfs is not dfs:
         raise ValueError(f"cross-filesystem move {src!r} -> {dst!r}")

@@ -85,6 +85,7 @@ from ballista_spark.sources.avroio import (
     read_avro_projected,
 )
 from ballista_spark.sources.decodecache import DecodeCache
+from ballista_spark.sources.deltalog import _filters_to_column
 
 __all__ = [
     "read_iceberg_table",
@@ -2675,33 +2676,6 @@ def _decoded_file_path_col():
             "%2B",
         )
     )
-
-
-def _filters_to_column(filters: list[tuple[str, str, object]]):
-    """AND of advisory filter triples as a real row predicate — the
-    exact-match side of the same language the readers prune on."""
-    from pyspark.sql import functions as F
-
-    cond = F.lit(True)
-    for col, op, val in filters:
-        c = F.col(col)
-        if op == "=":
-            cond = cond & (c == F.lit(val))
-        elif op == "!=":
-            cond = cond & (c != F.lit(val))
-        elif op == "<":
-            cond = cond & (c < F.lit(val))
-        elif op == "<=":
-            cond = cond & (c <= F.lit(val))
-        elif op == ">":
-            cond = cond & (c > F.lit(val))
-        elif op == ">=":
-            cond = cond & (c >= F.lit(val))
-        elif op == "is_null":
-            cond = cond & c.isNull()
-        else:
-            raise ValueError(f"unsupported delete operator {op!r}")
-    return cond
 
 
 def delete_from_iceberg_table(

@@ -11,7 +11,8 @@ suites, iterative-fit mirrors) to ``BS_TEST_FULL=1``, the same switch
 that already gates the sf0.01 graded sweeps.  The list lives in
 ``tools/test_tiers.json``; regenerate with ``tools/gen_test_tiers.py``
 after a ``tools/partest.py`` run.  Tests absent from the list (new
-tests) run by default."""
+tests, and the ``KEEP`` list of ``tools/gen_test_tiers.py``) run by
+default."""
 
 from __future__ import annotations
 
@@ -37,6 +38,14 @@ _TIERS_PATH = os.path.join(
 )
 
 
+def tier_key(nodeid: str) -> str:
+    """The tier list's key for a node ID: "tests/test_x.py::Class::name[p]"
+    keys as "test_x.py::Class::name[p]" (tools/gen_test_tiers.junit_key
+    builds the same key from a junit testcase)."""
+    path, _, rest = nodeid.partition("::")
+    return f"{os.path.basename(path)}::{rest}"
+
+
 def pytest_collection_modifyitems(config, items):
     """Defer the slow tail to the BS_TEST_FULL tier (module docstring)."""
     if _FULL:
@@ -50,10 +59,7 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier (>10s); set BS_TEST_FULL=1 to run"
     )
     for item in items:
-        # nodeid is "tests/test_x.py::name[param]"; the tier list keys on
-        # "test_x.py::name[param]"
-        path, _, name = item.nodeid.partition("::")
-        if f"{os.path.basename(path)}::{name}" in slow:
+        if tier_key(item.nodeid) in slow:
             item.add_marker(marker)
 
 

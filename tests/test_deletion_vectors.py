@@ -365,13 +365,17 @@ def test_dv_append_and_checkpoint_preserve_dv_and_protocol(spark, tmp_path):
     requirements)."""
     import os as _os
 
-    from ballista_spark.sources.deltalog import write_delta_table
+    from ballista_spark.sources.deltalog import (
+        _write_checkpoint,
+        write_delta_table,
+    )
 
     table = _base_table(tmp_path)
     _delete_with_dv(table, 1, "f0.parquet", _dv_descriptor_u(table, [1]))
     src = spark.createDataFrame([(999, "app")], "id long, cat string")
-    v = write_delta_table(src, table, checkpoint_interval=1)
+    v = write_delta_table(src, table)
     assert v == 2
+    _write_checkpoint(table, v)
     log = _os.path.join(table, "_delta_log")
     assert _os.path.exists(
         _os.path.join(log, f"{2:020d}.checkpoint.parquet")

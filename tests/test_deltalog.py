@@ -137,10 +137,8 @@ def test_string_stats_truncation_guard():
 
 def test_checkpoint_bounds_log_replay(spark, tmp_path):
     path = str(tmp_path / "t")
-    for i in range(12):  # checkpoint_interval=10 → checkpoint at v10
-        write_delta_table(
-            _df(spark, [(i, "c", float(i))]), path, checkpoint_interval=10
-        )
+    for i in range(12):  # CHECKPOINT_INTERVAL=10 → checkpoint at v10
+        write_delta_table(_df(spark, [(i, "c", float(i))]), path)
     logdir = os.path.join(path, "_delta_log")
     assert os.path.exists(os.path.join(logdir, "_last_checkpoint"))
     assert any(n.endswith(".checkpoint.parquet") for n in os.listdir(logdir))
@@ -262,11 +260,10 @@ def test_txn_action_makes_commits_idempotent(spark, tmp_path):
 
 def test_txn_state_survives_checkpoint(spark, tmp_path):
     path = str(tmp_path / "t")
-    for i in range(11):  # crosses the checkpoint_interval=10 boundary
+    for i in range(11):  # crosses the CHECKPOINT_INTERVAL=10 boundary
         write_delta_table(
             _df(spark, [(i, "c", 0.0)]),
             path,
-            checkpoint_interval=10,
             txn_app_id="app",
             txn_version=i,
         )
@@ -514,7 +511,7 @@ def test_lazy_stats_and_checkpoint_cache_consistency(spark, tmp_path):
     assert f2.stats is None
 
     table = str(tmp_path / "t")
-    for i in range(12):  # checkpoint_interval=10 -> checkpoint at v10
+    for i in range(12):  # CHECKPOINT_INTERVAL=10 -> checkpoint at v10
         write_delta_table(
             spark.createDataFrame([(i, float(i))], "id long, v double"),
             table,

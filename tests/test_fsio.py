@@ -599,16 +599,16 @@ def test_sqlite_log_store_recovers_crashed_winner(sqlite_store, monkeypatch):
     recorded temp, then reports the slot taken."""
     path = "mock://tbl/_delta_log/00000000000000000001.json"
 
-    real_write = fsio.write_bytes
+    real_move = fsio.move
     crashed = {"done": False}
 
-    def crash_on_publish(p, data):
-        if p == path and not crashed["done"]:
+    def crash_on_publish(src, dst):
+        if dst == path and not crashed["done"]:
             crashed["done"] = True
             raise RuntimeError("simulated crash after claim")
-        real_write(p, data)
+        real_move(src, dst)
 
-    monkeypatch.setattr(fsio, "write_bytes", crash_on_publish)
+    monkeypatch.setattr(fsio, "move", crash_on_publish)
     with pytest.raises(RuntimeError, match="simulated crash"):
         sqlite_store.put_if_absent(path, b"winner-bytes")
     assert not fsio.exists(path)  # claimed but unpublished
@@ -672,38 +672,66 @@ def test_sqlite_log_store_winner_completed_by_racing_loser(
     assert fsio.read_bytes(path) == b"mine"
 
 
-def test_sqlite_log_store_winner_survives_torn_recovery_read(
-    sqlite_store, monkeypatch
-):
-    """r11 robustness: write_bytes makes a path visible at open time
-    (empty/partial until close), so a winner racing a loser's _recover
-    mid-publish can READ TORN BYTES of its own commit.  The winner's
-    classification must retry past the transient mismatch and report
-    success — an all-losers outcome was observed once in the 12-writer
-    race under heavy host load."""
-    path = "mock://tbl/_delta_log/00000000000000000011.json"
-    real_write = fsio.write_bytes
-    real_read = fsio.read_bytes
-    torn = {"reads": 0}
+@pytest.mark.parametrize("store", ["local", "sqlite"])
+def test_commit_path_never_shows_torn_bytes(store, tmp_path, request):
+    """Commits publish whole: racing writers put-if-absent large
+    payloads on a run of commit paths while a reader polls them, and
+    every read of a path that exists returns that path's final bytes
+    (an exclusive create followed by a write shows readers an empty
+    file first)."""
+    import sys
+    import threading
 
-    def write_and_mirror(p, data):
-        real_write(p, data)
-        if ".tmp-" in p:
-            # racing loser mid-publish: the object exists...
-            real_write(path, data)
+    if store == "sqlite":
+        request.getfixturevalue("sqlite_store")
+        base = "mock://torn/_delta_log"
+    else:
+        base = str(tmp_path / "_delta_log")
+    paths = [f"{base}/{v:020d}.json" for v in range(60)]
+    n_writers = 6  # more threads than cores
+    payload = lambda w, v: bytes([65 + w]) * (1 << 20) + b"%d" % v  # noqa: E731
+    seen: list[tuple[str, int]] = []  # (path, hash of the bytes read)
+    done = threading.Event()
 
-    def torn_then_real(p):
-        if p == path and torn["reads"] < 2:
-            torn["reads"] += 1
-            return b""  # ...but its bytes are not all visible yet
-        return real_read(p)
+    def read_loop():
+        while not done.is_set():
+            for p in paths:
+                if fsio.exists(p):
+                    try:
+                        seen.append((p, hash(fsio.read_bytes(p))))
+                    except FileNotFoundError:
+                        pass
 
-    monkeypatch.setattr(fsio, "write_bytes", write_and_mirror)
-    monkeypatch.setattr(fsio, "read_bytes", torn_then_real)
-    sqlite_store.put_if_absent(path, b"mine")  # must NOT raise
-    monkeypatch.setattr(fsio, "write_bytes", real_write)
-    monkeypatch.setattr(fsio, "read_bytes", real_read)
-    assert fsio.read_bytes(path) == b"mine"
+    def write_loop(w):
+        for v, p in enumerate(paths):
+            try:
+                fsio.create_exclusive(p, payload(w, v))
+            except FileExistsError:
+                pass
+
+    reader = threading.Thread(target=read_loop)
+    writers = [
+        threading.Thread(target=write_loop, args=(w,)) for w in range(n_writers)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        reader.start()
+        for t in writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=120)
+        done.set()
+        reader.join(timeout=120)
+    finally:
+        done.set()
+        sys.setswitchinterval(interval)
+    assert not reader.is_alive() and not any(t.is_alive() for t in writers)
+    final = {p: fsio.read_bytes(p) for p in paths}
+    for v, p in enumerate(paths):
+        assert final[p] in {payload(w, v) for w in range(n_writers)}
+    torn = [p for p, h in seen if h != hash(final[p])]
+    assert seen and not torn, torn[:5]
 
 
 def test_sqlite_log_store_never_clobbers_foreign_commit(

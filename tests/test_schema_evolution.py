@@ -87,6 +87,7 @@ def test_retired_names_survive_checkpointing(spark, tmp_path):
     omitted configuration)."""
     from ballista_spark.sources.deltalog import (
         _read_last_checkpoint,
+        _write_checkpoint,
         read_delta_snapshot,
     )
 
@@ -95,11 +96,8 @@ def test_retired_names_survive_checkpointing(spark, tmp_path):
         _df(spark, [(1, "a", 1.0)], "id long, cat string, v double"), path
     )
     alter_delta_table(path, drop_columns=["v"])
-    # force a checkpoint at the next commit
-    write_delta_table(
-        _df(spark, [(2, "b")], "id long, cat string"), path,
-        checkpoint_interval=2,
-    )
+    v = write_delta_table(_df(spark, [(2, "b")], "id long, cat string"), path)
+    _write_checkpoint(path, v)
     assert _read_last_checkpoint(path) is not None
     snap = read_delta_snapshot(path)  # reconstructed FROM the checkpoint
     assert "ballista.droppedColumns" in snap.configuration

@@ -182,6 +182,28 @@ def test_sql_dml_end_to_end(spark, tmp_path, fmt):
     assert out["operation"] == "vacuum" and out["version"] >= 0
 
 
+def test_dml_result_row_is_built_in_the_jvm(spark, tmp_path):
+    """The one-row result keeps its schema (version nullable) and scans
+    no Python RDD, so collecting it starts no Python workers."""
+    from pyspark.sql import types as T
+
+    from ballista_spark.sources.deltalog import write_delta_table
+
+    ctx = _ctx(spark)
+    path = str(tmp_path / "t")
+    write_delta_table(spark.createDataFrame([(1,), (2,)], "id long"), path)
+    ctx.register_delta("t", path)
+    schema = T._parse_datatype_string(
+        "operation string, table string, version long"
+    )
+    for where, version in (("id = 1", 1), ("id = 3", None)):
+        df = ctx.sql(f"DELETE FROM t WHERE {where}").df
+        assert df.schema == schema
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert tuple(df.collect()[0]) == ("delete", "t", version)
+
+
 def test_create_external_table_sql(spark, tmp_path):
     """The reference's exact DDL text (ballista.proto:236-248) through
     ctx.sql: CSV with schema/header/delimiter, parquet, and a DELTA

@@ -35,6 +35,31 @@ OUT = os.path.join(REPO, "tools", "test_tiers.json")
 #: 199 over threshold carrying 84% of the 10530 s sharded total).
 THRESHOLD_S = 10.0
 
+#: tests that always run in the default tier, however slow: the
+#: lakehouse commit-path contract.  An entry names a test file, a test
+#: function (all its parameters) or one node ID, in tier-key form.
+KEEP = (
+    "test_delta_commit.py",
+    "test_deltalog.py::test_checkpoint_bounds_log_replay",
+    "test_sql_dml.py::test_sql_dml_end_to_end[delta]",
+)
+
+
+def kept(key: str) -> bool:
+    """``key`` is covered by a KEEP entry."""
+    return any(key == k or key.startswith((k + "::", k + "[")) for k in KEEP)
+
+
+def junit_key(classname: str, name: str) -> str:
+    """The tier key (``test_x.py::Class::name[param]``, what conftest's
+    ``tier_key`` makes of a node ID) of a junit testcase, whose
+    classname is the dotted module path followed by any classes."""
+    parts = classname.split(".")
+    mod = next((i for i, p in enumerate(parts) if p.startswith("test_")), None)
+    if mod is None:
+        return ""
+    return "::".join([parts[mod] + ".py", *parts[mod + 1:], name])
+
 
 def main() -> int:
     slow: dict[str, float] = {}
@@ -47,13 +72,9 @@ def main() -> int:
         for case in root.iter("testcase"):
             n_total += 1
             t = float(case.get("time") or 0.0)
-            cls = case.get("classname") or ""
-            fname = os.path.basename(case.get("file") or "") or next(
-                (p + ".py" for p in cls.split(".") if p.startswith("test_")), cls
-            )
-            if t > THRESHOLD_S and fname:
-                nodeid = f"{fname}::{case.get('name')}"
-                slow[nodeid] = max(slow.get(nodeid, 0.0), round(t, 1))
+            key = junit_key(case.get("classname") or "", case.get("name"))
+            if t > THRESHOLD_S and key and not kept(key):
+                slow[key] = max(slow.get(key, 0.0), round(t, 1))
     if not slow:
         print("no junit XMLs found — run tools/partest.py first", file=sys.stderr)
         return 2
