@@ -52,9 +52,11 @@ Scale design:
   s3a://…) go through ``pyarrow.fs``.  Exclusive-create degrades to
   check-then-write on object stores (fsio warns; multi-writer S3
   deployments need the spec's LogStore coordination layer — documented,
-  loud).  Footer-stat collection for large commits distributes as one
-  ``mapInPandas`` pass instead of a serial driver loop
-  (``_collect_file_stats``).
+  loud).
+- **One data plane with Iceberg** (``sources/datafiles.py``): staging,
+  footer stats, deletion-vector decode placement, the change-feed diff
+  and the MERGE/UPDATE/DELETE row plans are shared; this module keeps
+  the log, the stats encoding and proofs, the scan and the commit.
 
 Supported protocol subset (checked, not assumed): reader version ≤ 2,
 plus reader version 3 tables whose readerFeatures are columnMapping
@@ -88,7 +90,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ballista_spark.sources import fsio
+from ballista_spark.sources import datafiles, fsio
+from ballista_spark.sources.datafiles import plan_compaction_bins
 from ballista_spark.sources.decodecache import DecodeCache
 
 __all__ = [
@@ -876,6 +879,23 @@ def _check_writer_protocol(
             )
 
 
+def _writer_check(op: str, *, adds_rows: bool = False, removes_rows: bool = False):
+    """The ``_commit`` plan of a data operation: no metadata change, but
+    the writer protocol (:func:`_check_writer_protocol`) is checked on
+    every snapshot the commit is built on.  The operation also calls it
+    on the snapshot it read before staging anything; a retry re-checks
+    because a racing commit may have changed the protocol (made the
+    table append-only, say) — delta-spark's MetadataChangedException."""
+
+    def plan(snap: DeltaSnapshot) -> dict:
+        _check_writer_protocol(
+            snap, op, adds_rows=adds_rows, removes_rows=removes_rows
+        )
+        return {}
+
+    return plan
+
+
 def _purges_deletion_vectors() -> None:
     """Round-8 stance on mutating DV tables: every mutation path reads
     touched files through ``_scan_snapshot`` (DV-applied) and rewrites
@@ -942,112 +962,40 @@ def _dv_positions(table_path: str, dv: dict) -> list[int]:
     return positions
 
 
-#: LOCAL tables whose descriptors declare at most this many total
-#: deleted positions decode tombstones on the driver (one Arrow batch,
-#: no job).  Measured warm on this box (read+count of a 1-DV table):
-#: 2k positions 0.46 s driver vs 0.67 s executor; 20k ~equal (0.78 vs
-#: 0.83); 100k the executor pass WINS (1.28 vs 1.02 — the pure-Python
-#: bitmap decode dominates and parallelizes).  Above the threshold, or
-#: on any non-local table, decode runs EXECUTOR-SIDE: the driver ships
-#: only the (file, descriptor) list — file-count rows — and one
-#: mapInPandas pass decodes each file's bitmap where the anti-join
-#: consumes it.  Driver memory never holds decoded positions (the
-#: round-8 weak item: a 100 TB table with 1% DV-deleted rows would
-#: otherwise materialize billions of int64s on the driver; measured:
-#: a 2.5M-position lifecycle adds 27 MB to driver maxrss on DELETE —
-#: the compressed per-file segments — and 0 MB on read).
-DV_DRIVER_DECODE_MAX = 20_000
-#: test hook: force the executor path regardless of size/locality
-DV_DECODE_FORCE_EXECUTOR = False
-
-#: positions per yielded Arrow batch in the executor decode (bounds a
-#: batch to ~30 MB even for pathological path lengths)
-_DV_DECODE_CHUNK = 1 << 18
+def _file_root(table_path: str) -> str:
+    """The table root in :func:`datafiles.decoded_file_path` spelling,
+    so ``f"{root}/{rel}"`` names a file the way a scan's
+    ``_metadata.file_path`` does.  file: URIs strip before abspath
+    (abspath('file:///x') would prepend the cwd)."""
+    tp = table_path
+    if tp.startswith("file:"):
+        tp = tp[5:]
+        while tp.startswith("//"):
+            tp = tp[1:]
+    return os.path.abspath(tp) if fsio.is_local(tp) else tp.rstrip("/")
 
 
 def _dv_tombstones(spark: SparkSession, snap: DeltaSnapshot):
     """(file path, row position) tombstone DataFrame for every live
     file carrying a deletion vector, or None.  The scan applies it as a
     single anti-join — the Iceberg position-delete pattern, never a
-    per-row Python filter.  Decode placement is size-aware (see
-    DV_DRIVER_DECODE_MAX): small local vectors decode on the driver,
-    everything else decodes executor-side so driver memory stays
-    O(file count), not O(deleted rows)."""
-    dv_files = [f for f in snap.files if f.deletion_vector]
-    if not dv_files:
-        return None
-    # DECODED spelling on this side (rel paths come unquoted out of
-    # _normalize_rel); the scan side url_decodes _metadata.file_path to
-    # match.  file: URIs strip before abspath (abspath('file:///x')
-    # would prepend the cwd — review finding).
-    tp = snap.table_path
-    if tp.startswith("file:"):
-        tp = tp[5:]
-        while tp.startswith("//"):
-            tp = tp[1:]
-    root = os.path.abspath(tp) if fsio.is_local(tp) else tp.rstrip("/")
-    cards = [
-        int(f.deletion_vector.get("cardinality") or 0) for f in dv_files
-    ]
-    # a descriptor WITHOUT cardinality could hide an arbitrarily large
-    # vector — unknown sizes always take the executor path (the Iceberg
-    # twin applies the same rule)
-    cardinality_known = all(c > 0 for c in cards)
-    if (
-        cardinality_known
-        and sum(cards) <= DV_DRIVER_DECODE_MAX
-        and fsio.is_local(snap.table_path)
-        and not DV_DECODE_FORCE_EXECUTOR
-    ):
-        import pandas as pd
-
-        frames = []
-        for f in dv_files:
-            pos = _dv_positions(snap.table_path, f.deletion_vector)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "__dfp": f"{root}/{f.path}",
-                        "__pos": pd.Series(pos, dtype="int64"),
-                    }
-                )
-            )
-        return spark.createDataFrame(
-            pd.concat(frames, ignore_index=True),
-            schema="__dfp string, __pos long",
-        )
-
+    per-row Python filter.  Decoded where :func:`datafiles.tombstones`
+    places it."""
+    root = _file_root(snap.table_path)
     table_path = snap.table_path
-    entries = [
-        (f"{root}/{f.path}", json.dumps(f.deletion_vector)) for f in dv_files
-    ]
-
-    def _decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ballista_spark.sources.deltalog import _dv_positions
-
-        for pdf in batches:
-            for dfp, dvj in zip(pdf["__dfp"], pdf["__dv"]):
-                pos = np.asarray(
-                    _dv_positions(table_path, json.loads(dvj)), dtype="int64"
-                )
-                for i in range(0, max(len(pos), 1), _DV_DECODE_CHUNK):
-                    chunk = pos[i : i + _DV_DECODE_CHUNK]
-                    yield pd.DataFrame(
-                        {
-                            "__dfp": np.repeat(dfp, len(chunk)),
-                            "__pos": chunk,
-                        }
-                    )
-
-    desc_df = spark.createDataFrame(entries, "__dfp string, __dv string")
-    n_part = max(
-        1, min(len(entries), spark.sparkContext.defaultParallelism)
-    )
-    return desc_df.repartition(n_part).mapInPandas(
-        _decode, "__dfp string, __pos long"
+    return datafiles.tombstones(
+        spark,
+        [
+            (
+                f"{root}/{f.path}",
+                json.dumps(f.deletion_vector),
+                int(f.deletion_vector.get("cardinality") or 0),
+            )
+            for f in snap.files
+            if f.deletion_vector
+        ],
+        lambda desc: _dv_positions(table_path, json.loads(desc)),
+        fsio.is_local(table_path),
     )
 
 
@@ -1101,9 +1049,10 @@ def _scan_snapshot(
     pos_col: str | None = None,
 ) -> DataFrame:
     """Scan the snapshot; ``file_col`` / ``pos_col`` optionally carry
-    each row's source-file URI and physical row position captured AT
-    THE SCAN STAGE (``_metadata`` — unlike ``input_file_name()`` they
-    survive any shuffle the DV anti-join introduces downstream)."""
+    each row's source file (:func:`datafiles.decoded_file_path`) and
+    physical row position captured AT THE SCAN STAGE (``_metadata`` —
+    unlike ``input_file_name()`` they survive any shuffle the DV
+    anti-join introduces downstream)."""
     data_fields = [
         fld for fld in snap.schema.fields if fld.name not in snap.partition_columns
     ]
@@ -1151,9 +1100,7 @@ def _scan_snapshot(
         shuffle downstream, neither input_file_name() nor _metadata
         resolves."""
         if file_col:
-            scan_df = scan_df.withColumn(
-                file_col, F.col("_metadata.file_path")
-            )
+            scan_df = scan_df.withColumn(file_col, datafiles.decoded_file_path())
         if pos_col:
             scan_df = scan_df.withColumn(
                 pos_col, F.col("_metadata.row_index")
@@ -1162,24 +1109,13 @@ def _scan_snapshot(
 
     def _strip_deleted(scan_df):
         """Anti-join DV tombstones on (file, row position) — applied on
-        the scan stage while `_metadata` is still resolvable.  The scan
-        side DECODES the percent-encoded file URI (literal '+' is
-        pre-escaped so url_decode cannot turn it into a space) because
-        the tombstone side is built from the log's DECODED relative
-        paths."""
+        the scan stage while `_metadata` is still resolvable; both sides
+        spell files as :func:`datafiles.decoded_file_path` does."""
         if tomb is None:
             return scan_df
         tagged = scan_df.withColumns(
             {
-                "__dfp": F.url_decode(
-                    F.regexp_replace(
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), "^file:/*", "/"
-                        ),
-                        r"\+",
-                        "%2B",
-                    )
-                ),
+                "__dfp": datafiles.decoded_file_path(),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -1247,50 +1183,40 @@ def _scan_snapshot(
 # writing
 
 
-def _file_stats_json(path: str, stat_cols: list[str]) -> tuple[str, int]:
-    """(stats JSON, numRecords) from a parquet footer — row-group min/max
-    aggregated per column.  Footer-only: no data pages are read.
-    Worker-safe (fsio-routed): the distributed stats pass calls this on
-    executors."""
-    import pyarrow.parquet as pq
+def _stat_scalar(_col: str, value):
+    """A parquet footer bound in Delta stats form — UTF-8 text, ISO
+    dates and timestamps, numbers, booleans; None (no bound from that
+    row group) for anything else."""
+    if isinstance(value, bytes):
+        try:
+            value = value.decode()
+        except UnicodeDecodeError:
+            return None
+    if hasattr(value, "isoformat"):
+        value = value.isoformat()
+    return value if isinstance(value, (int, float, str, bool)) else None
 
-    with fsio.open_input(path) as src:
-        md = pq.ParquetFile(src).metadata
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    nulls: dict[str, int] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            c = g.column(ci)
-            name = c.path_in_schema
-            if name not in stat_cols:
-                continue
-            st = c.statistics
-            if st is None:
-                continue
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + int(st.null_count)
-            if st.has_min_max:
-                mn, mx = st.min, st.max
-                if isinstance(mn, bytes):
-                    try:
-                        mn, mx = mn.decode(), mx.decode()
-                    except UnicodeDecodeError:
-                        continue
-                if hasattr(mn, "isoformat"):
-                    mn, mx = mn.isoformat(), mx.isoformat()
-                if not isinstance(mn, (int, float, str, bool)):
-                    continue
-                mins[name] = mn if name not in mins else min(mins[name], mn)
-                maxs[name] = mx if name not in maxs else max(maxs[name], mx)
+
+def _add_action(
+    f: datafiles.StagedFile, partition_values: dict, data_change: bool
+) -> dict:
+    """The ``add`` action of a staged file, with its footer stats."""
     stats = {
-        "numRecords": md.num_rows,
-        "minValues": mins,
-        "maxValues": maxs,
-        "nullCount": nulls,
+        "numRecords": f.footer.num_rows,
+        "minValues": f.footer.mins,
+        "maxValues": f.footer.maxs,
+        "nullCount": f.footer.nulls,
     }
-    return json.dumps(stats), md.num_rows
+    return {
+        "add": {
+            "path": f.path,
+            "partitionValues": partition_values,
+            "size": f.size,
+            "modificationTime": _now_ms(),
+            "dataChange": data_change,
+            "stats": json.dumps(stats),
+        }
+    }
 
 
 def _attempt_commit(table_path: str, version: int, actions: list[dict]) -> None:
@@ -1430,79 +1356,21 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
-#: NON-LOCAL commits staging at least this many files collect footer
-#: stats executor-side (one mapInPandas job).  Local paths always use
-#: the driver loop: measured on this box, 1,000 local footer reads take
-#: 0.15 s serially vs 4.5 s of Spark job overhead — the distributed
-#: pass only wins where each footer read is a ~10-100 ms object-store
-#: GET (10k files = minutes serial, seconds distributed).
-EXECUTOR_STATS_MIN_FILES = 64
-#: test hook: force the executor path on local paths too
-EXECUTOR_STATS_FORCE = False
-
-
-def _collect_file_stats(
-    spark: SparkSession | None,
-    base: str,
-    rels: list[str],
-    stat_cols: list[str],
-) -> dict[str, tuple[str, int]]:
-    """rel path -> (stats JSON, numRecords) for every staged file.
-
-    Local/small commits loop on the driver; large object-store commits
-    distribute the footer reads as ONE Arrow-batched ``mapInPandas``
-    pass over the path list (a 10k-file initial load reads 10k footers
-    across the cluster, not serially on the driver — the round-7
-    scale-killer)."""
-    if (
-        spark is None
-        or len(rels) < EXECUTOR_STATS_MIN_FILES
-        or (fsio.is_local(base) and not EXECUTOR_STATS_FORCE)
-    ):
-        return {r: _file_stats_json(f"{base}/{r}", stat_cols) for r in rels}
-
-    def _gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            recs = [
-                (r, *_file_stats_json(f"{base}/{r}", stat_cols))
-                for r in pdf["rel"]
-            ]
-            yield pd.DataFrame(
-                recs, columns=["rel", "stats", "num_records"]
-            )
-
-    paths_df = spark.createDataFrame(
-        [(r,) for r in rels], "rel string"
-    ).repartition(min(len(rels), spark.sparkContext.defaultParallelism))
-    rows = paths_df.mapInPandas(
-        _gen, "rel string, stats string, num_records long"
-    ).collect()
-    return {r["rel"]: (r["stats"], int(r["num_records"])) for r in rows}
-
-
 def _stage_data_files(
     df: DataFrame,
     table_path: str,
     partition_by: list[str],
-    data_change: bool = True,
     column_mapping: Mapping[str, str] | None = None,
 ) -> list[dict]:
-    """Write ``df`` via Spark into a staging dir, move the parquet files
-    into the table root (keeping hive partition subdirs), and return the
-    ready-to-commit ``add`` actions with footer-derived stats.  Zero-row
-    task outputs are dropped, never added.  IO is fsio-routed (works on
-    object storage) and stats collection distributes for large commits
-    (``_collect_file_stats``).
+    """Stage ``df`` into the table (:func:`datafiles.stage_files`, hive
+    partition subdirs kept) and return the ready-to-commit ``add``
+    actions with footer-derived stats.
 
     ``column_mapping`` (logical → physical) makes the staged files
     column-mapped-table citizens: parquet columns, hive partition dirs,
     partitionValues keys, and stats keys all carry PHYSICAL names (the
     delta-spark on-disk contract; the snapshot reader remaps them back
     to logical)."""
-    from urllib.parse import unquote
-
     cm = dict(column_mapping or {})
     if cm:
         # ONE atomic select, never sequential renames: after RENAME +
@@ -1513,52 +1381,18 @@ def _stage_data_files(
             *[df[c].alias(cm.get(c, c)) for c in df.columns]
         )
         partition_by = [cm.get(c, c) for c in partition_by]
-
-    staging = f"{table_path.rstrip('/')}/.staging-{uuid.uuid4().hex}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-
-    stat_cols = [
-        f.name for f in df.schema.fields if f.name not in set(partition_by)
-    ]
-    staged = [
-        (rel, size)
-        for rel, size in fsio.walk_files(staging)
-        if rel.endswith(".parquet")
-    ]
-    stats_by_rel = _collect_file_stats(
-        df.sparkSession, staging, [r for r, _ in staged], stat_cols
-    )
-    adds: list[dict] = []
-    for rel, size in staged:
-        stats, n_records = stats_by_rel[rel]
-        if n_records == 0:
-            continue  # empty task output — never added, swept with staging
+    stat_cols = set(df.columns) - set(partition_by)
+    adds = []
+    for f in datafiles.stage_files(
+        df, table_path, partition_by, stat_cols, _stat_scalar, lambda rel: rel
+    ):
         part_values = {}
-        for seg in rel.split("/")[:-1]:
+        for seg in f.path.split("/")[:-1]:
             k, _, v = seg.partition("=")
             part_values[k] = (
-                None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+                "" if v == "__HIVE_DEFAULT_PARTITION__" else _unquote(v)
             )
-        fsio.move(f"{staging}/{rel}", f"{table_path.rstrip('/')}/{rel}")
-        adds.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": {
-                        k: ("" if v is None else v)
-                        for k, v in part_values.items()
-                    },
-                    "size": size,
-                    "modificationTime": _now_ms(),
-                    "dataChange": data_change,
-                    "stats": stats,
-                }
-            }
-        )
-    fsio.remove_dir(staging)
+        adds.append(_add_action(f, part_values, data_change=True))
     return adds
 
 
@@ -2122,29 +1956,6 @@ def _write_checkpoint(table_path: str, version: int) -> None:
 # compaction
 
 
-def plan_compaction_bins(
-    sizes: list[int], target_bytes: int
-) -> list[list[int]]:
-    """First-fit-decreasing bin packing of file indices into rewrite
-    groups ≤ target_bytes (singletons already ≥ target stay untouched —
-    returned as no bin at all).  Pure function; the unit the compactor
-    tests against."""
-    order = sorted(range(len(sizes)), key=lambda i: -sizes[i])
-    bins: list[tuple[int, list[int]]] = []  # (remaining, members)
-    for i in order:
-        s = sizes[i]
-        if s >= target_bytes:
-            continue  # already big enough — leave in place
-        for bi, (rem, members) in enumerate(bins):
-            if s <= rem:
-                bins[bi] = (rem - s, members + [i])
-                break
-        else:
-            bins.append((target_bytes - s, [i]))
-    # a bin with one small file and nothing merged in is a no-op rewrite
-    return [members for _rem, members in bins if len(members) > 1]
-
-
 def compact_delta_table(
     spark: SparkSession,
     table_path: str,
@@ -2174,7 +1985,8 @@ def compact_delta_table(
     commit) or readers (old files stay until vacuum).
     """
     snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(snap, "OPTIMIZE")
+    check = _writer_check("OPTIMIZE")
+    check(snap)
     cm = snap.column_mapping
     by_part: dict[tuple, list[_AddFile]] = {}
     for f in snap.files:
@@ -2205,43 +2017,20 @@ def compact_delta_table(
             shaped = shaped.select(
                 *[shaped[c].alias(cm.get(c, c)) for c in shaped.columns]
             )
-        out_dir = f"{table_path.rstrip('/')}/.compact-{uuid.uuid4().hex}"
-        shaped.write.mode("overwrite").parquet(out_dir)
-        written = sorted(
-            (rel, size)
-            for rel, size in fsio.walk_files(out_dir)
-            if rel.endswith(".parquet")
+        prefix = f"{part_dir}/" if part_dir else ""
+        adds.extend(
+            _add_action(
+                f, {cm.get(c, c): (v or "") for c, v in key}, data_change=False
+            )
+            for f in datafiles.stage_files(
+                shaped,
+                table_path,
+                [],
+                stat_cols,
+                _stat_scalar,
+                lambda _rel: f"{prefix}part-compact-{uuid.uuid4().hex}.parquet",
+            )
         )
-        stats_by_rel = _collect_file_stats(
-            spark, out_dir, [r for r, _ in written], stat_cols
-        )
-        for name, size in written:
-            stats, n = stats_by_rel[name]
-            if n == 0:
-                continue  # empty range split — swept with out_dir
-            rel = (
-                f"{part_dir}/part-compact-{uuid.uuid4().hex}.parquet"
-                if part_dir
-                else f"part-compact-{uuid.uuid4().hex}.parquet"
-            )
-            fsio.move(
-                f"{out_dir}/{name}", f"{table_path.rstrip('/')}/{rel}"
-            )
-            adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": {
-                            cm.get(c, c): (v or "") for c, v in key
-                        },
-                        "size": size,
-                        "modificationTime": _now_ms(),
-                        "dataChange": False,
-                        "stats": stats,
-                    }
-                }
-            )
-        fsio.remove_dir(out_dir)
         removes.extend(group)
 
     def _scan_group(group: list[_AddFile]) -> DataFrame:
@@ -2279,6 +2068,7 @@ def compact_delta_table(
         snap,
         "OPTIMIZE",
         {"targetSize": str(target_file_bytes)},
+        plan=check,
         remove=removes,
         add=adds,
         data_change=False,
@@ -2353,10 +2143,10 @@ def merge_delta_table(
     1. *stats pre-prune* (driver, free): for single-key merges the
        source's key min/max cut the candidate file list via the log's
        per-file stats before any Spark work;
-    2. *touch probe*: candidates are scanned once with
-       ``input_file_name()`` semi-joined against the (broadcast) source
-       keys — a CDC batch is small, so the probe is a map-only broadcast
-       join over just the candidate files;
+    2. *touch probe* (:func:`datafiles.touched`): candidates are
+       scanned once, semi-joined against the (broadcast) source keys —
+       a CDC batch is small, so the probe is a map-only broadcast join
+       over just the candidate files;
     3. *rewrite*: only touched files are read again; kept rows
        (anti-join), updates, and inserts are staged as new files, and
        remove(touched)+add(new) publish in ONE exclusive-create commit.
@@ -2377,9 +2167,8 @@ def merge_delta_table(
     on = list(on)
     txn = None if txn_app_id is None else (txn_app_id, int(txn_version))
     snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(
-        snap, "MERGE", adds_rows=True, removes_rows=True
-    )
+    check = _writer_check("MERGE", adds_rows=True, removes_rows=True)
+    check(snap)
     if _replayed(snap, txn):
         # streaming-upsert idempotence: a replayed epoch is skipped
         # before any file is staged
@@ -2398,86 +2187,45 @@ def merge_delta_table(
 
     # 1. stats pre-prune (proof-based superset of the true touch set)
     candidates = snap.files
-    if len(on) == 1:
-        key = on[0]
-        bounds = source.agg(
-            F.min(key).alias("lo"), F.max(key).alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is not None:
-            lo, hi = bounds["lo"], bounds["hi"]
-            if hasattr(lo, "isoformat"):
-                lo, hi = lo.isoformat(), hi.isoformat()
-            candidates = [
-                f
-                for f in candidates
-                if _file_may_match(f, key, ">=", lo)
-                and _file_may_match(f, key, "<=", hi)
-            ]
+    bounds = datafiles.key_range(source, on[0]) if len(on) == 1 else None
+    if bounds is not None:
+        lo, hi = bounds
+        if hasattr(lo, "isoformat"):
+            lo, hi = lo.isoformat(), hi.isoformat()
+        candidates = [
+            f
+            for f in candidates
+            if _file_may_match(f, on[0], ">=", lo)
+            and _file_may_match(f, on[0], "<=", hi)
+        ]
 
     # 2. touch probe over the candidates only
-    touched_rel: set[str] = set()
-    if candidates:
-        probe_snap = snap.with_files(candidates)
-        # _metadata.file_path, NOT input_file_name(): the DV anti-join
-        # inside _scan_snapshot may shuffle, after which
-        # input_file_name() returns '' and the probe silently under-
-        # touches (review finding)
-        probe = (
-            _scan_snapshot(
-                spark, probe_snap, file_col="__file"
-            )
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .select("__file")
-            .distinct()
-        )
-        for r in probe.collect():
-            # input_file_name yields a URI (file:/… locally, s3a://… on
-            # a cluster) — _normalize_rel handles both spellings
-            touched_rel.add(_normalize_rel(table_path, r["__file"]))
-    touched = [f for f in snap.files if f.path in touched_rel]
+    touched = _touched(
+        spark,
+        snap,
+        candidates,
+        lambda df: df.join(datafiles.merge_keys(source, on), on=on, how="semi"),
+    )
 
     # 3. rewrite touched files + build the single commit
+    rewritten, inserts = datafiles.merge_rows(
+        _scan_snapshot(spark, snap.with_files(touched)) if touched else None,
+        source,
+        on,
+        when_matched,
+        insert_not_matched,
+    )
     adds: list[dict] = []
-    matched_keys = None
-    if touched:
-        tsnap = snap.with_files(touched)
-        touched_df = _scan_snapshot(spark, tsnap)
-        kept = touched_df.join(
-            F.broadcast(source.select(*on).distinct()), on=on, how="left_anti"
-        )
-        matched_keys = (
-            touched_df.select(*on)
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .distinct()
-        )
-        new_rows = kept
-        if when_matched == "update":
-            updates = source.join(matched_keys, on=on, how="semi")
-            new_rows = kept.unionByName(updates)
-        adds.extend(
-            _stage_data_files(
-                new_rows,
-                table_path,
-                snap.partition_columns,
-                data_change=True,
-                column_mapping=snap.column_mapping,
+    for rows in (rewritten, inserts):
+        if rows is not None:
+            adds.extend(
+                _stage_data_files(
+                    rows,
+                    table_path,
+                    snap.partition_columns,
+                    column_mapping=snap.column_mapping,
+                )
             )
-        )
-    if insert_not_matched:
-        inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=on, how="left_anti")
-        elif touched_rel == set() and candidates:
-            pass  # no key matched anything: all of source inserts
-        adds.extend(
-            _stage_data_files(
-                inserts,
-                table_path,
-                snap.partition_columns,
-                data_change=True,
-                column_mapping=snap.column_mapping,
-            )
-        )
     source.unpersist()
     if not adds and not touched:
         return None
@@ -2486,67 +2234,47 @@ def merge_delta_table(
         snap,
         "MERGE",
         {"predicate": ",".join(on), "matchedAction": when_matched},
+        plan=check,
         remove=touched,
         add=adds,
         txn=txn,
     )
 
 
-def _filters_to_column(filters: list[tuple[str, str, object]]):
-    """AND of (col, op, value) triples as a real row predicate — the
-    exact-match twin of the proof language `_file_may_match` prunes on
-    (Delta and Iceberg DML both use it)."""
-    cond = F.lit(True)
-    for col, op, val in filters:
-        c = F.col(col)
-        if op == "=":
-            cond = cond & (c == F.lit(val))
-        elif op == "!=":
-            cond = cond & (c != F.lit(val))
-        elif op == "<":
-            cond = cond & (c < F.lit(val))
-        elif op == "<=":
-            cond = cond & (c <= F.lit(val))
-        elif op == ">":
-            cond = cond & (c > F.lit(val))
-        elif op == ">=":
-            cond = cond & (c >= F.lit(val))
-        elif op == "is_null":
-            cond = cond & c.isNull()
-        else:
-            raise ValueError(f"unsupported filter operator {op!r}")
-    return cond
+def _touched(
+    spark: SparkSession,
+    snap: DeltaSnapshot,
+    candidates: list[_AddFile],
+    hit: Callable[[DataFrame], DataFrame],
+) -> list[_AddFile]:
+    """The candidates holding a row ``hit`` keeps — the exact touch
+    probe (:func:`datafiles.touched`) over a DV-applied scan."""
+    root = _file_root(snap.table_path)
+    return datafiles.touched(
+        candidates,
+        lambda files: _scan_snapshot(
+            spark, snap.with_files(files), file_col=datafiles.FILE_COL
+        ),
+        hit,
+        lambda f: f"{root}/{f.path}",
+    )
 
 
-def _touched_files(
+def _touched_by_filters(
     spark: SparkSession,
     snap: DeltaSnapshot,
     filters: list[tuple[str, str, object]],
 ) -> list[_AddFile]:
     """The files that PROVABLY contain predicate matches: stats prune
-    first (driver, free), then one scan of the surviving candidates with
-    ``input_file_name()`` — so a file inside the stats superset whose
-    rows all miss the predicate is never rewritten."""
+    first (driver, free), then the exact probe of the survivors."""
     candidates = [
         f
         for f in snap.files
         if all(_file_may_match(f, c, op, v) for (c, op, v) in filters)
     ]
-    if not candidates:
-        return []
-    probe_snap = snap.with_files(candidates)
-    # file identity captured at the scan stage (file_col) — see the
-    # merge probe comment: input_file_name() is '' after a DV shuffle
-    probe = (
-        _scan_snapshot(spark, probe_snap, file_col="__file")
-        .where(F.coalesce(_filters_to_column(filters), F.lit(False)))
-        .select("__file")
-        .distinct()
+    return _touched(
+        spark, snap, candidates, lambda df: df.where(datafiles.matches(filters))
     )
-    touched_rel: set[str] = set()
-    for r in probe.collect():
-        touched_rel.add(_normalize_rel(snap.table_path, r["__file"]))
-    return [f for f in snap.files if f.path in touched_rel]
 
 
 def delete_from_delta_table(
@@ -2560,10 +2288,10 @@ def delete_from_delta_table(
     prunes on), touching ONLY files that provably contain matches.
     Returns the commit version, or None when nothing matched (zero
     writes).  Rows where the predicate is NULL are KEPT — SQL DELETE
-    semantics.  The transactional twin of
-    ``delete_from_iceberg_table`` (sources/iceberg.py), same
-    discipline: stats pre-prune → exact scan-stage touch probe → only
-    the touched files pay, untouched files never read twice.
+    semantics.  Same discipline as ``delete_from_iceberg_table``
+    (the row plans are :mod:`datafiles`'): stats pre-prune → exact
+    scan-stage touch probe → only the touched files pay, untouched
+    files never read twice.
 
     Two write shapes:
 
@@ -2590,7 +2318,8 @@ def delete_from_delta_table(
             "DataFrame to truncate)"
         )
     snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(snap, "DELETE", removes_rows=True)
+    check = _writer_check("DELETE", removes_rows=True)
+    check(snap)
     if use_deletion_vectors is None:
         # the delta-spark default: tables that enable DVs get the
         # zero-rewrite shape (SQL DELETE included); explicit True/False
@@ -2601,22 +2330,19 @@ def delete_from_delta_table(
             .lower()
             == "true"
         )
-    touched = _touched_files(spark, snap, filters)
+    touched = _touched_by_filters(spark, snap, filters)
     if not touched:
         return None
     if use_deletion_vectors:
         return _delete_with_deletion_vectors(
             spark, table_path, snap, touched, filters
         )
-    tsnap = snap.with_files(touched)
-    survivors = _scan_snapshot(spark, tsnap).where(
-        ~F.coalesce(_filters_to_column(filters), F.lit(False))
-    )
     adds = _stage_data_files(
-        survivors,
+        datafiles.survivors(
+            _scan_snapshot(spark, snap.with_files(touched)), filters
+        ),
         table_path,
         snap.partition_columns,
-        data_change=True,
         column_mapping=snap.column_mapping,
     )
     return _commit(
@@ -2624,6 +2350,7 @@ def delete_from_delta_table(
         snap,
         "DELETE",
         {"predicate": json.dumps([list(map(str, f)) for f in filters])},
+        plan=check,
         remove=touched,
         add=adds,
     )
@@ -2651,66 +2378,27 @@ def _delete_with_deletion_vectors(
 
     from ballista_spark.sources.dvbitmap import z85_encode
 
-    tsnap = snap.with_files(touched)
-    matched = (
-        _scan_snapshot(spark, tsnap, file_col="__file", pos_col="__rowpos")
-        .where(F.coalesce(_filters_to_column(list(filters)), F.lit(False)))
-        .select("__file", "__rowpos")
+    root = _file_root(table_path)
+    all_pos = (
+        _scan_snapshot(
+            spark,
+            snap.with_files(touched),
+            file_col=datafiles.FILE_COL,
+            pos_col="__rowpos",
+        )
+        .where(datafiles.matches(filters))
+        .select(
+            F.col(datafiles.FILE_COL).alias("__dfp"),
+            F.col("__rowpos").alias("__pos"),
+            F.lit(1).alias("__new"),
+        )
     )
-
-    def _to_rel(batches):
-        import pandas as pd
-
-        from ballista_spark.sources.deltalog import _normalize_rel
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "__rel": [
-                        _normalize_rel(table_path, p) for p in pdf["__file"]
-                    ],
-                    "__pos": pdf["__rowpos"].astype("int64"),
-                    "__new": 1,
-                }
-            )
-
-    pos_schema = "__rel string, __pos long, __new int"
-    all_pos = matched.mapInPandas(_to_rel, pos_schema)
-
     # existing descriptors on touched files fold into the replacement
     # vector executor-side too (the scan already anti-joined them out,
     # so matched rows are new deletions only)
-    old_rows = [
-        (f.path, json.dumps(f.deletion_vector))
-        for f in touched
-        if f.deletion_vector
-    ]
-    if old_rows:
-
-        def _decode_old(batches):
-            import numpy as np
-            import pandas as pd
-
-            from ballista_spark.sources.deltalog import _dv_positions
-
-            for pdf in batches:
-                for rel, dvj in zip(pdf["__rel"], pdf["__dv"]):
-                    pos = np.asarray(
-                        _dv_positions(table_path, json.loads(dvj)),
-                        dtype="int64",
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "__rel": np.repeat(rel, len(pos)),
-                            "__pos": pos,
-                            "__new": np.zeros(len(pos), dtype="int32"),
-                        }
-                    )
-
-        old_df = spark.createDataFrame(
-            old_rows, "__rel string, __dv string"
-        ).mapInPandas(_decode_old, pos_schema)
-        all_pos = all_pos.unionByName(old_df)
+    old = _dv_tombstones(spark, snap.with_files(touched))
+    if old is not None:
+        all_pos = all_pos.unionByName(old.withColumn("__new", F.lit(0)))
 
     def _pack(pdf):
         import struct as _struct
@@ -2724,7 +2412,7 @@ def _delete_with_deletion_vectors(
             # probe superset / carried-only descriptor: no new deletion
             return pd.DataFrame(
                 {
-                    "__rel": pd.Series([], dtype=str),
+                    "__dfp": pd.Series([], dtype=str),
                     "__segment": pd.Series([], dtype=object),
                     "__size": pd.Series([], dtype="int64"),
                     "__card": pd.Series([], dtype="int64"),
@@ -2739,7 +2427,7 @@ def _delete_with_deletion_vectors(
         )
         return pd.DataFrame(
             {
-                "__rel": [pdf["__rel"].iloc[0]],
+                "__dfp": [pdf["__dfp"].iloc[0]],
                 "__segment": [seg],
                 "__size": [len(data)],
                 "__card": [len(vals)],
@@ -2747,11 +2435,11 @@ def _delete_with_deletion_vectors(
         )
 
     packed = {
-        r["__rel"]: r
-        for r in all_pos.groupBy("__rel")
+        r["__dfp"]: r
+        for r in all_pos.groupBy("__dfp")
         .applyInPandas(
             _pack,
-            "__rel string, __segment binary, __size long, __card long",
+            "__dfp string, __segment binary, __size long, __card long",
         )
         .collect()
     }
@@ -2759,7 +2447,7 @@ def _delete_with_deletion_vectors(
     removes: list[_AddFile] = []
     vec_files: list[tuple[_AddFile, dict]] = []
     for f in touched:
-        seg = packed.get(f.path)
+        seg = packed.get(f"{root}/{f.path}")
         if seg is None:
             continue  # probe superset: no live row actually matched
         removes.append(f)
@@ -2808,6 +2496,7 @@ def _delete_with_deletion_vectors(
         )
 
     def plan(s: DeltaSnapshot) -> dict:
+        _check_writer_protocol(s, "DELETE", removes_rows=True)
         if "deletionVectors" in s.reader_features:
             return {}
         return {
@@ -2846,55 +2535,32 @@ def update_delta_table(
     non-matching rows inside a touched file are carried byte-identical
     through the rewrite (``CASE WHEN`` keeps them).
     """
-    if not set_exprs:
-        raise ValueError("UPDATE needs at least one SET column")
     snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(
-        snap, "UPDATE", adds_rows=True, removes_rows=True
-    )
-    by_name = {f.name: f for f in snap.schema.fields}
+    datafiles.check_set_columns(set_exprs, snap.schema)
+    check = _writer_check("UPDATE", adds_rows=True, removes_rows=True)
+    check(snap)
     for name in set_exprs:
-        if name not in by_name:
-            raise ValueError(f"SET column {name!r} is not in the table schema")
         if name in snap.partition_columns:
             raise ValueError(
                 f"SET column {name!r} is a partition column — rewrite "
                 "paths would change; use merge_delta_table (delete+insert)"
             )
-    if filters:
-        touched = _touched_files(spark, snap, list(filters))
-        pred = F.coalesce(_filters_to_column(list(filters)), F.lit(False))
-    else:
-        touched = list(snap.files)
-        pred = F.lit(True)
+    touched = (
+        _touched_by_filters(spark, snap, list(filters))
+        if filters
+        else list(snap.files)
+    )
     if not touched:
         return None
-    tsnap = snap.with_files(touched)
-    base = _scan_snapshot(spark, tsnap)
-    # SQL UPDATE semantics: every SET right-hand side evaluates against
-    # the PRE-update row, so `SET a = b, b = a` swaps.  One select
-    # projection over the original row — never chained withColumn (a
-    # later assignment would see already-updated columns).
-    replacements = {
-        name: F.when(
-            pred,
-            (F.expr(expr) if isinstance(expr, str) else expr).cast(
-                by_name[name].dataType
-            ),
-        ).otherwise(F.col(name))
-        for name, expr in set_exprs.items()
-    }
-    updated = base.select(
-        *[
-            replacements[c].alias(c) if c in replacements else F.col(c)
-            for c in base.columns
-        ]
-    )
     adds = _stage_data_files(
-        updated,
+        datafiles.updated_rows(
+            _scan_snapshot(spark, snap.with_files(touched)),
+            set_exprs,
+            snap.schema,
+            filters,
+        ),
         table_path,
         snap.partition_columns,
-        data_change=True,
         column_mapping=snap.column_mapping,
     )
     return _commit(
@@ -2907,6 +2573,7 @@ def update_delta_table(
             ),
             "set": json.dumps({k: str(v) for k, v in set_exprs.items()}),
         },
+        plan=check,
         remove=touched,
         add=adds,
     )
@@ -2914,11 +2581,6 @@ def update_delta_table(
 
 # ---------------------------------------------------------------------------
 # incremental change reads
-
-#: union/exceptAll chains in change-feed reads localCheckpoint every
-#: this many commits, bounding logical-plan depth on long windows
-CDF_CHECKPOINT_EVERY = 32
-
 
 def read_delta_changes(
     spark: SparkSession,
@@ -2952,8 +2614,7 @@ def read_delta_changes(
     # raw commit JSON keys partitionValues by PHYSICAL names on a
     # column-mapped table; remap to logical like read_delta_snapshot
     to_logical = {p: l for l, p in snap.column_mapping.items()}
-    out = None
-    n_parts = 0
+    parts = []
     for v in versions:
         adds = []
         for action in _iter_commit_actions(_commit_path(table_path, v)):
@@ -2978,21 +2639,19 @@ def read_delta_changes(
                 )
         if not adds:
             continue
-        vsnap = snap.with_files(adds)
-        part = _scan_snapshot(spark, vsnap).withColumn(
-            "_commit_version", F.lit(v).cast("long")
+        parts.append(
+            _scan_snapshot(spark, snap.with_files(adds)).withColumn(
+                "_commit_version", F.lit(v).cast("long")
+            )
         )
-        out = part if out is None else out.unionByName(part)
-        n_parts += 1
-        if n_parts % CDF_CHECKPOINT_EVERY == 0:
-            out = out.localCheckpoint(eager=True)  # bound plan depth
-    if out is None:
-        empty_schema = T.StructType(
+    return datafiles.union_changes(
+        spark,
+        parts,
+        T.StructType(
             list(snap.schema.fields)
             + [T.StructField("_commit_version", T.LongType())]
-        )
-        return spark.createDataFrame([], empty_schema)
-    return out
+        ),
+    )
 
 
 def read_delta_cdf(
@@ -3011,8 +2670,8 @@ def read_delta_cdf(
     Per commit: pure appends emit their rows as inserts (no diff work);
     rewrite commits (UPDATE/DELETE/MERGE/overwrite) diff the removed
     files' rows against the added files' rows as multisets
-    (``exceptAll`` both ways), so carried rows cancel exactly and only
-    real changes surface.  ``dataChange: false`` rewrites (compaction/
+    (:func:`datafiles.row_changes`), so carried rows cancel exactly and
+    only real changes surface.  ``dataChange: false`` rewrites (compaction/
     clustering) and metadata-only commits emit nothing.  Cost tracks
     the TOUCHED files per commit — for touch-only mutations that is the
     mutation size, not the table.
@@ -3072,63 +2731,22 @@ def read_delta_cdf(
                     )
             return _scan_snapshot(spark, snap_at.with_files(files))
 
-        new_df = _side(added_rel, _snap_at(v)) if added_rel else None
-        old_df = _side(removed_rel, _snap_at(v - 1)) if removed_rel else None
-        if old_df is None:
-            changes = new_df.withColumn("_change_type", F.lit("insert"))
-        elif new_df is None:
-            changes = old_df.withColumn("_change_type", F.lit("delete"))
-        else:
-            # align pre/post schemas (ALTER between them) before diffing
-            cols = [f.name for f in new_df.schema.fields]
-            old_aligned = old_df.select(
-                *[
-                    F.col(c) if c in old_df.columns
-                    else F.lit(None).cast(
-                        dict((f.name, f.dataType) for f in new_df.schema.fields)[c]
-                    ).alias(c)
-                    for c in cols
-                ]
-            )
-            changes = (
-                new_df.exceptAll(old_aligned)
-                .withColumn("_change_type", F.lit("insert"))
-                .unionByName(
-                    old_aligned.exceptAll(new_df).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            )
-        # align to the FINAL window schema (an ALTER inside the window
-        # must not make early commits un-unionable / un-selectable)
-        final_types = {f.name: f.dataType for f in final.schema.fields}
-        changes = changes.select(
-            *[
-                F.col(c) if c in changes.columns
-                else F.lit(None).cast(final_types[c]).alias(c)
-                for c in final_types
-            ],
-            "_change_type",
+        changes = datafiles.row_changes(
+            _side(removed_rel, _snap_at(v - 1)) if removed_rel else None,
+            _side(added_rel, _snap_at(v)) if added_rel else None,
+            final.schema,
         )
         parts.append(
             changes.withColumn("_commit_version", F.lit(v).cast("long"))
         )
-    if not parts:
-        empty_schema = T.StructType(
+    return datafiles.union_changes(
+        spark,
+        parts,
+        T.StructType(
             list(final.schema.fields)
             + [
                 T.StructField("_change_type", T.StringType()),
                 T.StructField("_commit_version", T.LongType()),
             ]
-        )
-        return spark.createDataFrame([], empty_schema)
-    out = parts[0]
-    for i, p in enumerate(parts[1:], start=1):
-        out = out.unionByName(p, allowMissingColumns=True)
-        if i % CDF_CHECKPOINT_EVERY == 0:
-            # truncate the logical plan every K commits (the
-            # curate_corpus pattern): a 500-commit window would
-            # otherwise build a 1000+-node exceptAll/union chain whose
-            # analysis cost alone dwarfs the data
-            out = out.localCheckpoint(eager=True)
-    return out
+        ),
+    )

@@ -21,7 +21,7 @@ The encoder serves fixtures AND the production DV-write DELETE
 roaring bitmap per touched file, executor-side, into one shared DV
 file); mutations on DV tables otherwise apply-then-purge (a touched
 file rewrites without its descriptor).  The reader decodes descriptors
-executor-side for large vectors (``deltalog._dv_tombstones``) and
+executor-side for large vectors (``datafiles.tombstones``) and
 applies them as a (file, position) anti-join at the scan stage — never
 a per-row Python filter, never all positions materialized on the
 driver.

@@ -27,8 +27,8 @@ magic D1D33964 is byte-identical to Delta's RoaringBitmapArray — one
 codec, ``dvbitmap.py``, serves both) resolve through the delete
 manifest's referenced_data_file/content_offset/content_size_in_bytes
 and apply as the same (file, position) anti-join as v2 position
-deletes, with the deltalog decode-placement policy (driver for small
-local vectors, mapInPandas otherwise).  v3 WRITES refuse loudly
+deletes, decoded where ``datafiles.tombstones`` places them (driver
+for small local vectors, mapInPandas otherwise).  v3 WRITES refuse loudly
 (row-lineage bookkeeping this writer does not produce).  v3
 ``initial-default`` schemas READ correctly for top-level primitive
 fields (round 10): files whose footers lack the field — written
@@ -79,13 +79,12 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ballista_spark.sources import fsio
+from ballista_spark.sources import datafiles, fsio
 from ballista_spark.sources.avroio import (
     read_avro_bytes,
     read_avro_projected,
 )
 from ballista_spark.sources.decodecache import DecodeCache
-from ballista_spark.sources.deltalog import _filters_to_column
 
 __all__ = [
     "read_iceberg_table",
@@ -443,23 +442,29 @@ def _metadata_versions(meta_dir: str) -> list[int]:
     )
 
 
-def _load_metadata(table_path: str) -> dict:
+def _load_metadata(table_path: str) -> tuple[dict, int]:
+    """(current table metadata, its version): the version-hint's, else
+    the highest ``vN.metadata.json`` on disk (hint-less tables read and
+    write fine).  A writer commits at exactly that version + 1
+    (:func:`_commit_metadata`), so a commit that landed since makes it
+    raise instead of being dropped."""
     meta_dir = os.path.join(table_path, "metadata")
     hint = os.path.join(meta_dir, "version-hint.text")
     if fsio.exists(hint):
-        v = int(fsio.read_text(hint).strip())
-        cand = os.path.join(meta_dir, f"v{v}.metadata.json")
+        version = int(fsio.read_text(hint).strip())
     else:
         versions = _metadata_versions(meta_dir)
         if not versions:
             raise FileNotFoundError(f"no Iceberg metadata under {table_path!r}")
-        cand = os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")
-    md = json.loads(fsio.read_text(cand))
+        version = versions[-1]
+    md = json.loads(
+        fsio.read_text(os.path.join(meta_dir, f"v{version}.metadata.json"))
+    )
     if int(md.get("format-version", 1)) > 3:
         raise IcebergFeatureError(
             f"format-version {md['format-version']} > 3 unsupported"
         )
-    return md
+    return md, version
 
 
 def _refuse_v3_write(md: dict, op: str) -> None:
@@ -612,7 +617,7 @@ def read_iceberg_snapshot(
     can match (identity partition transforms), before any entry
     decode; per-file bounds pruning stays the caller's move
     (:func:`read_iceberg_table`)."""
-    md = _load_metadata(table_path)
+    md, _ = _load_metadata(table_path)
     schema = _current_schema(md)
     initial_defaults = _collect_initial_defaults(schema)
     spark_schema = iceberg_to_spark_type(schema)
@@ -809,17 +814,6 @@ def _bounds_may_match(bounds: dict, col: str, op: str, value) -> bool:
     return True
 
 
-#: Same decode-placement policy (and measurements) as
-#: deltalog.DV_DRIVER_DECODE_MAX: local tables whose manifests declare
-#: at most this many total deleted positions decode deletion vectors on
-#: the driver (one Arrow batch, no job); larger vectors, unknown
-#: cardinalities, or non-local tables decode executor-side so driver
-#: memory stays O(DV count), never O(deleted rows).
-DV_DRIVER_DECODE_MAX = 20_000
-#: test hook: force the executor path regardless of size/locality
-DV_DECODE_FORCE_EXECUTOR = False
-
-
 def _read_dv_positions(
     puffin_path: str, offset: int, size: int, cardinality: int
 ) -> list[int]:
@@ -839,75 +833,42 @@ def _read_dv_positions(
     return pos
 
 
+def _position_tombstones(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """(data file path, row position) tombstones of v2 position-delete
+    files.  Delete files store the path exactly as the data manifest
+    did; the ``file:`` scheme strips like
+    :func:`datafiles.decoded_file_path`."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.read.parquet(*paths)
+        .select(
+            F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias("__dfp"),
+            F.col("pos").cast("long").alias("__pos"),
+        )
+        .distinct()
+    )
+
+
 def _dv_tombstones(spark: SparkSession, snap: IcebergSnapshot) -> DataFrame:
     """(data file path, row position) tombstones for every v3 deletion
-    vector in the snapshot — the anti-join side of the scan.  Paths
-    normalize exactly like the parquet position-delete side (file: URI
-    stripped; relative paths rooted at the table)."""
+    vector in the snapshot — the anti-join side of the scan, decoded
+    where :func:`datafiles.tombstones` places it.  Paths normalize
+    exactly like the parquet position-delete side (file: URI stripped;
+    relative paths rooted at the table)."""
     entries = []
     for puffin, ref, off, size, card in snap.dv_deletes:
         p = _norm_path(snap.table_path, ref)
         if fsio.is_local(p) and not os.path.isabs(p):
             p = os.path.abspath(p)
-        entries.append((p, puffin, int(off), int(size), int(card)))
-    total = sum(e[4] for e in entries)
-    cardinality_known = all(e[4] > 0 for e in entries)
-    if (
-        cardinality_known
-        and total <= DV_DRIVER_DECODE_MAX
-        and fsio.is_local(snap.table_path)
-        and not DV_DECODE_FORCE_EXECUTOR
-    ):
-        import pandas as pd
-
-        frames = [
-            pd.DataFrame(
-                {
-                    "__dfp": dfp,
-                    "__pos": pd.Series(
-                        _read_dv_positions(puf, off, size, card),
-                        dtype="int64",
-                    ),
-                }
-            )
-            for dfp, puf, off, size, card in entries
-        ]
-        return spark.createDataFrame(
-            pd.concat(frames, ignore_index=True),
-            schema="__dfp string, __pos long",
+        entries.append(
+            (p, json.dumps([puffin, int(off), int(size), int(card)]), int(card))
         )
-
-    def _decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ballista_spark.sources.deltalog import _DV_DECODE_CHUNK
-        from ballista_spark.sources.iceberg import _read_dv_positions
-
-        for pdf in batches:
-            for dfp, puf, off, size, card in zip(
-                pdf["__dfp"], pdf["__puffin"], pdf["__off"],
-                pdf["__size"], pdf["__card"],
-            ):
-                pos = np.asarray(
-                    _read_dv_positions(puf, int(off), int(size), int(card)),
-                    dtype="int64",
-                )
-                # chunk like deltalog._dv_tombstones: one huge DV must
-                # not become one unbounded Arrow batch (round-9 advice)
-                for i in range(0, max(len(pos), 1), _DV_DECODE_CHUNK):
-                    chunk = pos[i : i + _DV_DECODE_CHUNK]
-                    yield pd.DataFrame(
-                        {"__dfp": np.repeat(dfp, len(chunk)), "__pos": chunk}
-                    )
-
-    desc = spark.createDataFrame(
+    return datafiles.tombstones(
+        spark,
         entries,
-        "__dfp string, __puffin string, __off long, __size long, __card long",
-    )
-    n_part = max(1, min(len(entries), spark.sparkContext.defaultParallelism))
-    return desc.repartition(n_part).mapInPandas(
-        _decode, "__dfp string, __pos long"
+        lambda desc: _read_dv_positions(*json.loads(desc)),
+        fsio.is_local(snap.table_path),
     )
 
 
@@ -966,7 +927,7 @@ def read_iceberg_table(
         if has_deletes:
             df = df.withColumns(
                 {
-                    "__dfp": _decoded_file_path_col(),
+                    "__dfp": datafiles.decoded_file_path(),
                     "__pos": F.col("_metadata.row_index"),
                 }
             )
@@ -981,27 +942,18 @@ def read_iceberg_table(
         # not rows).  Paths normalize to scheme-less absolute form on
         # both sides — delete files store the path exactly as the data
         # manifest did, _metadata.file_path yields a file: URI.
-        tombstones = (
-            spark.read.parquet(*snap.delete_files)
-            .select(
-                F.regexp_replace(
-                    F.col("file_path"), "^file:/*", "/"
-                ).alias("__dfp"),
-                F.col("pos").cast("long").alias("__pos"),
-            )
-            .distinct()
-        )
         # no broadcast hint: AQE broadcasts when the tombstone side is
         # small (the usual case) but a billion-tombstone table must not
         # be forced through the driver
-        tagged = tagged.join(tombstones, ["__dfp", "__pos"], "left_anti")
+        tagged = tagged.join(
+            _position_tombstones(spark, snap.delete_files),
+            ["__dfp", "__pos"],
+            "left_anti",
+        )
     if snap.dv_deletes:
         # v3 deletion vectors: decode each referenced file's roaring
         # bitmap into (file, pos) tombstones and apply the SAME
-        # anti-join as parquet position deletes.  Decode placement is
-        # size-aware like deltalog._dv_tombstones: small local vectors
-        # decode on the driver, larger ones executor-side so driver
-        # memory stays O(DV count), never O(deleted rows).
+        # anti-join as parquet position deletes
         tagged = tagged.join(
             _dv_tombstones(spark, snap), ["__dfp", "__pos"], "left_anti"
         )
@@ -1057,11 +1009,6 @@ def read_iceberg_table(
     return tagged.select(*out_cols)
 
 
-#: changelog union chains localCheckpoint every this many snapshots,
-#: bounding logical-plan depth on long windows
-CDF_CHECKPOINT_EVERY = 32
-
-
 def read_iceberg_changelog(
     spark: SparkSession,
     table_path: str,
@@ -1069,16 +1016,16 @@ def read_iceberg_changelog(
     to_ordinal: int | None = None,
 ) -> DataFrame:
     """EXACT row-level change feed over snapshot-log ordinals
-    ``(from_ordinal, to_ordinal]`` — the Iceberg twin of
-    ``deltalog.read_delta_cdf`` and the batch complement of the
+    ``(from_ordinal, to_ordinal]``, diffed like ``deltalog.read_delta_cdf``
+    (:func:`datafiles.row_changes`) — the batch complement of the
     ``ballista_iceberg`` streaming source (which refuses non-append
     snapshots; this reads them).  Each changed row appears once with
     ``_change_type`` (``insert`` | ``delete``; updates are their
     delete+insert pair), ``_snapshot_ordinal`` and ``_snapshot_id``.
 
     Fast path: snapshots without delete files diff ONLY the file-set
-    symmetric difference (added rows vs removed rows, multiset
-    ``exceptAll`` — carried rows never scan twice), so touch-only
+    symmetric difference (added rows vs removed rows as multisets —
+    carried rows never scan twice), so touch-only
     commits cost the mutation, not the table.  Snapshots carrying v2
     delete files fall back to a full applied-table diff (a new
     tombstone changes visible rows without changing data files — the
@@ -1087,7 +1034,7 @@ def read_iceberg_changelog(
     """
     from pyspark.sql import functions as F
 
-    md = _load_metadata(table_path)
+    md, _ = _load_metadata(table_path)
     log = md.get("snapshot-log") or []
     hi = len(log) - 1 if to_ordinal is None else int(to_ordinal)
     ordinals = [i for i in range(len(log)) if from_ordinal < i <= hi]
@@ -1112,18 +1059,6 @@ def read_iceberg_changelog(
         if ordinals
         else iceberg_to_spark_type(_current_schema(md))
     )
-    final_types = {f.name: f.dataType for f in final_schema.fields}
-
-    def _align(df):
-        return df.select(
-            *[
-                F.col(c) if c in df.columns
-                else F.lit(None).cast(final_types[c]).alias(c)
-                for c in final_types
-            ],
-            "_change_type",
-        )
-
     parts = []
     for i in ordinals:
         child_id = log[i]["snapshot-id"]
@@ -1171,55 +1106,23 @@ def read_iceberg_changelog(
             )
         if new_df is None and old_df is None:
             continue  # no data change (e.g. metadata-only)
-        if old_df is None:
-            changes = new_df.withColumn("_change_type", F.lit("insert"))
-        elif new_df is None:
-            changes = old_df.withColumn("_change_type", F.lit("delete"))
-        else:
-            cols = [f.name for f in new_df.schema.fields]
-            old_named = old_df.select(
-                *[
-                    F.col(c) if c in old_df.columns
-                    else F.lit(None).cast(
-                        dict(
-                            (f.name, f.dataType) for f in new_df.schema.fields
-                        )[c]
-                    ).alias(c)
-                    for c in cols
-                ]
-            )
-            changes = (
-                new_df.exceptAll(old_named)
-                .withColumn("_change_type", F.lit("insert"))
-                .unionByName(
-                    old_named.exceptAll(new_df).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            )
         parts.append(
-            _align(changes)
+            datafiles.row_changes(old_df, new_df, final_schema)
             .withColumn("_snapshot_ordinal", F.lit(i).cast("long"))
             .withColumn("_snapshot_id", F.lit(child_id).cast("long"))
         )
-    if not parts:
-        empty = T.StructType(
+    return datafiles.union_changes(
+        spark,
+        parts,
+        T.StructType(
             list(final_schema.fields)
             + [
                 T.StructField("_change_type", T.StringType()),
                 T.StructField("_snapshot_ordinal", T.LongType()),
                 T.StructField("_snapshot_id", T.LongType()),
             ]
-        )
-        return spark.createDataFrame([], empty)
-    out = parts[0]
-    for i, p in enumerate(parts[1:], start=1):
-        out = out.unionByName(p)
-        if i % CDF_CHECKPOINT_EVERY == 0:
-            # bound logical-plan depth on long windows (the
-            # deltalog.read_delta_cdf / curate_corpus pattern)
-            out = out.localCheckpoint(eager=True)
-    return out
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1346,53 +1249,21 @@ def _to_iceberg_scalar(v, iceberg_type: str):
     return v
 
 
-def _footer_bounds(path: str, ids: dict[int, tuple[str, str]]):
-    """(record_count, lower, upper, null_counts) from ONE parquet footer
-    — same footer-only discipline as deltalog._file_stats_json, but
-    keyed by Iceberg field id with Appendix-D encoded values.
-    Worker-safe (fsio-routed): ``_bounds_for_files`` runs it on
-    executors for large commits."""
-    import pyarrow.parquet as pq
-
-    with fsio.open_input(path) as src:
-        md = pq.ParquetFile(src).metadata
-    by_name = {name: (fid, ftype) for fid, (name, ftype) in ids.items()}
-    mins: dict[int, bytes] = {}
-    maxs: dict[int, bytes] = {}
-    nulls: dict[int, int] = {}
-    raw_min: dict[str, object] = {}
-    raw_max: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            c = g.column(ci)
-            name = c.path_in_schema
-            if name not in by_name:
-                continue
-            st = c.statistics
-            if st is None:
-                continue
-            fid, _ftype = by_name[name]
-            if st.null_count is not None:
-                nulls[fid] = nulls.get(fid, 0) + int(st.null_count)
-            if st.has_min_max:
-                mn = _to_iceberg_scalar(st.min, _ftype)
-                mx = _to_iceberg_scalar(st.max, _ftype)
-                if mn is None or mx is None:
-                    continue
-                raw_min[name] = (
-                    mn if name not in raw_min else min(raw_min[name], mn)
-                )
-                raw_max[name] = (
-                    mx if name not in raw_max else max(raw_max[name], mx)
-                )
-    for name, (fid, ftype) in by_name.items():
-        lo = encode_bound(raw_min.get(name), ftype)
-        hi = encode_bound(raw_max.get(name), ftype)
+def _footer_bounds(footer: datafiles.Footer, ids: dict[int, tuple[str, str]]):
+    """(lower, upper, null counts) keyed by Iceberg field id, bounds as
+    Appendix-D bytes, from a footer folded in the spec's scalar domain
+    (:func:`_to_iceberg_scalar`).  A column gets bounds only when both
+    encode."""
+    lowers: dict[int, bytes] = {}
+    uppers: dict[int, bytes] = {}
+    for fid, (name, ftype) in ids.items():
+        lo = encode_bound(footer.mins.get(name), ftype)
+        hi = encode_bound(footer.maxs.get(name), ftype)
         if lo is not None and hi is not None:
-            mins[fid] = lo
-            maxs[fid] = hi
-    return md.num_rows, mins, maxs, nulls
+            lowers[fid] = lo
+            uppers[fid] = hi
+    fid_of = {name: fid for fid, (name, _t) in ids.items()}
+    return lowers, uppers, {fid_of[n]: c for n, c in footer.nulls.items()}
 
 
 #: Avro schemas for the v1 manifest + manifest list, spec field names
@@ -1615,86 +1486,7 @@ def _schema_compatible(existing: T.StructType, new: T.StructType) -> bool:
 # ---------------------------------------------------------------------------
 # shared commit machinery — ONE implementation of staging, manifest
 # writing and the exclusive-create metadata commit, used by write /
-# compact / delete / expire (they had begun to diverge; the
-# version-hint fallback below is the same one _load_metadata uses)
-
-
-def _current_metadata_version(meta_dir: str) -> int:
-    """The metadata version a writer builds on: the hint when present,
-    else the highest vN.metadata.json on disk (hint-less tables read
-    fine and must write fine too), else 0."""
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if fsio.exists(hint):
-        return int(fsio.read_text(hint).strip())
-    versions = _metadata_versions(meta_dir)
-    return max(versions) if versions else 0
-
-
-#: same policy as deltalog._collect_file_stats: NON-LOCAL commits with
-#: at least this many files read their footers executor-side (local
-#: footer reads are ~0.15 ms each — a Spark job never pays for itself)
-EXECUTOR_STATS_MIN_FILES = 64
-#: test hook: force the executor path on local paths too
-EXECUTOR_STATS_FORCE = False
-
-
-def _bounds_for_files(
-    spark: SparkSession | None, paths: list[str], ids: dict
-) -> dict[str, tuple]:
-    """path -> ``_footer_bounds`` result for every staged file; large
-    object-store commits distribute the footer reads (one tiny Spark
-    job over the path list — the Appendix-D byte bounds pickle back
-    losslessly) instead of a serial driver loop."""
-    if (
-        spark is None
-        or len(paths) < EXECUTOR_STATS_MIN_FILES
-        or (not paths)
-        or (fsio.is_local(paths[0]) and not EXECUTOR_STATS_FORCE)
-    ):
-        return {p: _footer_bounds(p, ids) for p in paths}
-    sc = spark.sparkContext
-    rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
-    return dict(rdd.map(lambda p: (p, _footer_bounds(p, ids))).collect())
-
-
-def _entry_for_file(
-    dest: str,
-    snapshot_id: int,
-    size: int,
-    bounds: tuple,
-    content: int = 0,
-) -> dict | None:
-    """Manifest entry (status ADDED) for one staged parquet file with
-    its Appendix-D footer bounds; None for an empty task output.
-    ``content=1`` marks a position-delete file (written through the
-    v2-shaped ``_DELETE_MANIFEST_ENTRY_SCHEMA``, whose data_file record
-    carries the discriminator; the v1 data schema ignores the key)."""
-    n_records, lowers, uppers, nulls = bounds
-    if n_records == 0:
-        return None
-    return {
-        "status": 1,  # ADDED
-        "snapshot_id": snapshot_id,
-        "sequence_number": None,  # inherit the manifest's (v2 entries)
-        "data_file": {
-            "content": content,
-            "file_path": dest,
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": n_records,
-            "file_size_in_bytes": size,
-            "block_size_in_bytes": 67108864,
-            "null_value_counts": [
-                {"key": k, "value": v} for k, v in sorted(nulls.items())
-            ],
-            "lower_bounds": [
-                {"key": k, "value": v} for k, v in sorted(lowers.items())
-            ],
-            "upper_bounds": [
-                {"key": k, "value": v} for k, v in sorted(uppers.items())
-            ],
-        },
-    }
+# compact / delete / expire
 
 
 def _stage_entries(
@@ -1704,49 +1496,65 @@ def _stage_entries(
     snapshot_id: int,
     content: int = 0,
 ) -> list[dict]:
-    """Distributed parquet staging → ``data/`` + manifest entries.
+    """Stage ``df`` under ``data/`` (:func:`datafiles.stage_files`) and
+    return its manifest entries (status ADDED) with Appendix-D footer
+    bounds.  ``content=1`` marks position-delete files (written through
+    the v2-shaped ``_DELETE_MANIFEST_ENTRY_SCHEMA``, whose data_file
+    record carries the discriminator; the v1 data schema ignores it).
 
     The spec REQUIRES int64-micros parquet timestamps (and Spark's
     INT96 default also writes no statistics, killing bound pruning) —
     TIMESTAMP_MICROS is forced for the staging write, then restored.
-    IO is fsio-routed; footer bounds for large commits are collected
-    executor-side (``_bounds_for_files``), not in a driver loop.
     """
     import uuid as _uuid
 
     spark = df.sparkSession
-    data_dir = f"{table_path.rstrip('/')}/data"
-    fsio.mkdirs(data_dir)
-    staging = f"{table_path.rstrip('/')}/.staging-{_uuid.uuid4().hex}"
+    types = dict(ids.values())
     ts_key = "spark.sql.parquet.outputTimestampType"
     prev_ts = spark.conf.get(ts_key, None)
     spark.conf.set(ts_key, "TIMESTAMP_MICROS")
     try:
-        _stamp_field_ids(df, ids).write.mode("overwrite").parquet(staging)
+        staged = datafiles.stage_files(
+            _stamp_field_ids(df, ids),
+            table_path,
+            [],
+            types,
+            lambda name, v: _to_iceberg_scalar(v, types[name]),
+            lambda rel: f"data/{_uuid.uuid4().hex}-{rel.rsplit('/', 1)[-1]}",
+        )
     finally:
         if prev_ts is None:
             spark.conf.unset(ts_key)
         else:
             spark.conf.set(ts_key, prev_ts)
-    staged = sorted(
-        (rel, size)
-        for rel, size in fsio.walk_files(staging)
-        if rel.endswith(".parquet")
-    )
-    bounds = _bounds_for_files(
-        spark, [f"{staging}/{rel}" for rel, _ in staged], ids
-    )
     entries = []
-    for rel, size in staged:
-        b = bounds[f"{staging}/{rel}"]
-        if b[0] == 0:
-            continue  # empty task output — swept with staging
-        dest = f"{data_dir}/{_uuid.uuid4().hex}-{rel.rsplit('/', 1)[-1]}"
-        fsio.move(f"{staging}/{rel}", dest)
-        e = _entry_for_file(dest, snapshot_id, size, b, content=content)
-        if e is not None:
-            entries.append(e)
-    fsio.remove_dir(staging)
+    for f in staged:
+        lowers, uppers, nulls = _footer_bounds(f.footer, ids)
+        entries.append(
+            {
+                "status": 1,  # ADDED
+                "snapshot_id": snapshot_id,
+                "sequence_number": None,  # inherit the manifest's (v2)
+                "data_file": {
+                    "content": content,
+                    "file_path": f"{table_path.rstrip('/')}/{f.path}",
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": f.footer.num_rows,
+                    "file_size_in_bytes": f.size,
+                    "block_size_in_bytes": 67108864,
+                    "null_value_counts": [
+                        {"key": k, "value": v} for k, v in sorted(nulls.items())
+                    ],
+                    "lower_bounds": [
+                        {"key": k, "value": v} for k, v in sorted(lowers.items())
+                    ],
+                    "upper_bounds": [
+                        {"key": k, "value": v} for k, v in sorted(uppers.items())
+                    ],
+                },
+            }
+        )
     return entries
 
 
@@ -1815,6 +1623,19 @@ def _commit_metadata(meta_dir: str, new_md: dict, base_version: int) -> None:
         os.replace(hint_tmp, hint)
     else:
         fsio.write_text(hint, str(base_version + 1))
+
+
+def _current_manifests(table_path: str, md: dict) -> list[dict]:
+    """The current snapshot's manifest-list records, carried forward
+    verbatim into a new snapshot's list."""
+    cur = next(
+        s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"]
+    )
+    manifests, _sch = read_avro_bytes(
+        fsio.read_bytes(_norm_path(table_path, cur["manifest-list"]))
+    )
+    names = [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
+    return [{k: m.get(k) for k in names} for m in manifests]
 
 
 def _live_entries(table_path: str, snap_md: dict) -> list[dict]:
@@ -1900,10 +1721,10 @@ def write_iceberg_table(
     fsio.mkdirs(meta_dir)
 
     try:
-        md = _load_metadata(table_path)
+        md, version = _load_metadata(table_path)
         _refuse_v3_write(md, "WRITE")
     except FileNotFoundError:
-        md = None
+        md, version = None, 0
     if md is not None:
         schema_json = _current_schema(md)
         existing_spark = iceberg_to_spark_type(schema_json)
@@ -1918,23 +1739,13 @@ def write_iceberg_table(
     else:
         schema_json, last_column_id = spark_to_iceberg_schema(df.schema)
         table_uuid = str(_uuid.uuid4())
-    # new version = version READ + 1 (not highest-on-disk + 1): if a
-    # racer already claimed it, the exclusive create below raises
-    # instead of silently dropping that racer's snapshot
-    prev_version = _current_metadata_version(meta_dir) if md is not None else 0
 
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be passed together")
     if txn_app_id is not None and md is not None:
         # idempotent replay check BEFORE staging: a redelivered epoch is
         # skipped without writing a byte
-        last = None
-        for s in md.get("snapshots", []):
-            summ = s.get("summary") or {}
-            if summ.get("txn-app-id") == txn_app_id:
-                v = int(summ.get("txn-version", -1))
-                if last is None or v > last[0]:
-                    last = (v, s["snapshot-id"])
+        last = _last_txn(md, txn_app_id)
         if last is not None and int(txn_version) <= last[0]:
             return last[1]
 
@@ -1951,19 +1762,7 @@ def write_iceberg_table(
     if md is not None and md.get("current-snapshot-id") not in (None, -1):
         parent_snapshot_id = md["current-snapshot-id"]
         if mode == "append":
-            cur = next(
-                s
-                for s in md.get("snapshots", [])
-                if s["snapshot-id"] == parent_snapshot_id
-            )
-            prev_manifests, _sch = read_avro_bytes(
-                fsio.read_bytes(_norm_path(table_path, cur["manifest-list"]))
-            )
-            for m in prev_manifests:
-                carried.append(
-                    {k: m.get(k) for k in
-                     [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]}
-                )
+            carried = _current_manifests(table_path, md)
     # a table upgraded to v2 (first position delete) keeps its version
     # and advances the sequence counter on every commit; v1 tables
     # stay v1 with no sequence bookkeeping
@@ -2030,7 +1829,7 @@ def write_iceberg_table(
             ),
         },
     )
-    _commit_metadata(meta_dir, new_md, prev_version)
+    _commit_metadata(meta_dir, new_md, version)
     return snapshot_id
 
 
@@ -2072,10 +1871,9 @@ def alter_iceberg_table(
     drop_columns = list(drop_columns or [])
     if not add_columns and not drop_columns:
         raise ValueError("ALTER needs add_columns and/or drop_columns")
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "ALTER")
     meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     schema_json = _current_schema(md)
     names = {f["name"] for f in schema_json["fields"]}
     props = dict(md.get("properties") or {})
@@ -2123,8 +1921,8 @@ def alter_iceberg_table(
             sorted(retired | set(drop_columns))
         )
         new_md["properties"] = props
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return prev_version + 1
+    _commit_metadata(meta_dir, new_md, version)
+    return version + 1
 
 
 def _file_has_field_ids(path: str) -> bool:
@@ -2144,19 +1942,10 @@ def _file_has_field_ids(path: str) -> bool:
 def _files_missing_field_ids(
     spark: SparkSession | None, paths: list[str]
 ) -> list[str]:
-    """Paths whose parquet footers lack field ids; large object-store
-    tables distribute the footer check (the `_bounds_for_files`
-    pattern) instead of a serial driver loop."""
-    if (
-        spark is None
-        or len(paths) < EXECUTOR_STATS_MIN_FILES
-        or not paths
-        or (fsio.is_local(paths[0]) and not EXECUTOR_STATS_FORCE)
-    ):
-        return [p for p in paths if not _file_has_field_ids(p)]
-    sc = spark.sparkContext
-    rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
-    return sorted(rdd.filter(lambda p: not _file_has_field_ids(p)).collect())
+    """Paths whose parquet footers lack field ids, the footer checks
+    placed by :func:`datafiles.per_file`."""
+    has_ids = datafiles.per_file(spark, paths, _file_has_field_ids)
+    return [p for p in paths if not has_ids[p]]
 
 
 def _absent_default_fields(path: str, targets: tuple) -> frozenset:
@@ -2185,21 +1974,10 @@ def _absent_default_fields(path: str, targets: tuple) -> frozenset:
 def _absent_defaults_per_file(
     spark: SparkSession | None, paths: list[str], targets: tuple
 ) -> dict:
-    """{path: frozenset(absent defaulted field names)}; large
-    object-store tables distribute the footer probe (the
-    `_files_missing_field_ids` pattern) instead of a serial driver
-    loop."""
-    if (
-        spark is None
-        or len(paths) < EXECUTOR_STATS_MIN_FILES
-        or not paths
-        or (fsio.is_local(paths[0]) and not EXECUTOR_STATS_FORCE)
-    ):
-        return {p: _absent_default_fields(p, targets) for p in paths}
-    sc = spark.sparkContext
-    rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
-    return dict(
-        rdd.map(lambda p: (p, _absent_default_fields(p, targets))).collect()
+    """{path: frozenset(absent defaulted field names)}, the footer
+    probes placed by :func:`datafiles.per_file`."""
+    return datafiles.per_file(
+        spark, paths, lambda p: _absent_default_fields(p, targets)
     )
 
 
@@ -2245,7 +2023,7 @@ def _scan_with_initial_defaults(
         if tag:
             g = g.withColumns(
                 {
-                    "__dfp": _decoded_file_path_col(),
+                    "__dfp": datafiles.decoded_file_path(),
                     "__pos": F.col("_metadata.row_index"),
                 }
             )
@@ -2288,7 +2066,7 @@ def rename_iceberg_column(
     the current schema).  Returns the new metadata version."""
     if old == new:
         raise ValueError("rename to the same name is a no-op")
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "RENAME COLUMN")
     schema_json = _current_schema(md)
     names = [f["name"] for f in schema_json["fields"]]
@@ -2358,13 +2136,12 @@ def rename_iceberg_column(
     ) + 1
     new_schema = {"type": "struct", "schema-id": new_sid, "fields": fields}
     meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     new_md = dict(md)
     new_md["schema"] = new_schema  # v1 single-schema face
     new_md["schemas"] = prior + [new_schema]
     new_md["current-schema-id"] = new_sid
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return prev_version + 1
+    _commit_metadata(meta_dir, new_md, version)
+    return version + 1
 
 
 def set_iceberg_table_properties(
@@ -2389,18 +2166,17 @@ def set_iceberg_table_properties(
             "ballista.dropped-columns is ALTER's retired-name registry "
             "— it cannot be edited directly"
         )
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "SET TBLPROPERTIES")
     meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     props = dict(md.get("properties") or {})
     for k in unset:
         props.pop(k, None)
     props.update(set_props)
     new_md = dict(md)
     new_md["properties"] = props
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return prev_version + 1
+    _commit_metadata(meta_dir, new_md, version)
+    return version + 1
 
 
 def compact_iceberg_table(
@@ -2409,18 +2185,18 @@ def compact_iceberg_table(
     target_file_bytes: int = 128 * 1024 * 1024,
     cluster_by: list[str] | None = None,
 ) -> int | None:
-    """Transactional small-file compaction — the Iceberg twin of
+    """Transactional small-file compaction, the Iceberg form of
     ``deltalog.compact_delta_table``.  Returns the new snapshot id, or
     None when nothing needed compacting.
 
     Three rewrite shapes, committed as one REPLACE snapshot:
 
-    - default: FFD bin-pack files under ``target_file_bytes`` (shared
-      planner) and rewrite each bin as one file; untouched files'
-      manifest records carry forward verbatim (status EXISTING, bounds
-      bytes untouched).
+    - default: FFD bin-pack files under ``target_file_bytes``
+      (``datafiles.plan_compaction_bins``) and rewrite each bin as one
+      file; untouched files' manifest records carry forward verbatim
+      (status EXISTING, bounds bytes untouched).
     - ``cluster_by``: range-partition + sort ALL live rows into
-      ``ceil(total/target)`` outputs — the Delta twin's clustered mode.
+      ``ceil(total/target)`` outputs — Delta's clustered mode.
       FFD bins are size-based, not key-based, so composing them with a
       per-bin sort would leave every output spanning the full key range
       and bounds would prune nothing; clustering must be a full
@@ -2437,38 +2213,27 @@ def compact_iceberg_table(
     ``dataChange: false`` analogue.
     """
     import math
-    import time
     import uuid as _uuid
 
-    from ballista_spark.sources.deltalog import plan_compaction_bins
-
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "OPTIMIZE")
     schema_json = _current_schema(md)
     ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
+    live = _current_live(table_path, md)
+    if live is None:
         return None
-    live = _live_entries(table_path, snaps[cur_id])
     data_live = [
         e for e in live if (e["data_file"].get("content", 0) or 0) == 0
     ]
-    has_deletes = len(data_live) != len(live)
-
     snapshot_id = _uuid.uuid4().int >> 75
-    spark_schema = iceberg_to_spark_type(schema_json)
     sizes = [int(e["data_file"]["file_size_in_bytes"]) for e in data_live]
 
-    if has_deletes or cluster_by:
-        # full rewrite (see docstring); MOR path reads through the
-        # tombstone-applying reader
+    if len(data_live) != len(live) or cluster_by:
+        # full rewrite (see docstring); a table with delete files reads
+        # through the tombstone-applying reader
         if not data_live:
             return None
-        total = sum(sizes)
-        n_out = max(1, math.ceil(total / target_file_bytes))
+        n_out = max(1, math.ceil(sum(sizes) / target_file_bytes))
         src = read_iceberg_table(spark, table_path)
         if cluster_by:
             src = src.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
@@ -2479,72 +2244,40 @@ def compact_iceberg_table(
         else:
             src = src.coalesce(1)
         new_entries = _stage_entries(src, table_path, ids, snapshot_id)
-        carried = []
-        replaced_count = len(live)
+        replaced = live
     else:
-        bins = plan_compaction_bins(sizes, target_file_bytes)
+        bins = datafiles.plan_compaction_bins(sizes, target_file_bytes)
         if not bins:
             return None
-        replaced_idx = {i for b in bins for i in b}
         new_entries = []
+        replaced = []
         for b in bins:
-            paths = [
-                _norm_path(table_path, data_live[i]["data_file"]["file_path"])
-                for i in b
-            ]
+            group = [data_live[i] for i in b]
+            replaced.extend(group)
             new_entries.extend(
                 _stage_entries(
-                    _mutation_scan(spark, md, schema_json, paths).coalesce(1),
+                    _mutation_scan(
+                        spark, md, schema_json, _paths(table_path, group)
+                    ).coalesce(1),
                     table_path,
                     ids,
                     snapshot_id,
                 )
             )
-        carried = [
-            {
-                "status": 0,  # EXISTING — record carried verbatim
-                "snapshot_id": e.get("snapshot_id"),
-                "data_file": e["data_file"],
-            }
-            for i, e in enumerate(data_live)
-            if i not in replaced_idx
-        ]
-        replaced_count = len(replaced_idx)
-
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    return _commit_rewrite(
+        table_path,
+        md,
+        version,
+        live,
+        replaced,
+        new_entries,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": replaced_count,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+        {
             "operation": "replace",
             "added-data-files": str(len(new_entries)),
-            "deleted-data-files": str(replaced_count),
+            "deleted-data-files": str(len(replaced)),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+    )
 
 
 def expire_iceberg_snapshots(
@@ -2574,10 +2307,9 @@ def expire_iceberg_snapshots(
 
     now = int(time.time() * 1000) if now is None else int(now)
     horizon = now - int(retention_ms)
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "EXPIRE SNAPSHOTS")
     meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     snaps = list(md.get("snapshots") or [])
     if not snaps:
         return []
@@ -2640,7 +2372,7 @@ def expire_iceberg_snapshots(
         for e in (md.get("snapshot-log") or [])
         if e["snapshot-id"] not in expired_ids
     ]
-    _commit_metadata(meta_dir, new_md, prev_version)
+    _commit_metadata(meta_dir, new_md, version)
     return sorted(deleted)
 
 
@@ -2660,22 +2392,129 @@ def _mutation_scan(spark: SparkSession, md: dict, schema_json: dict, paths):
     return spark.read.schema(read_schema).parquet(*paths)
 
 
-def _decoded_file_path_col():
-    """``_metadata.file_path`` normalized to the manifests' raw spelling
-    — it is a PERCENT-ENCODED ``file:`` URI while manifests and delete
-    files store raw absolute paths; literal '+' is pre-escaped so
-    url_decode cannot turn it into a space.  Shared by the tombstone
-    anti-join (read side) and the position-delete writer (so both sides
-    of the (file, pos) join always agree byte-for-byte)."""
-    from pyspark.sql import functions as F
+def _paths(table_path: str, entries: list[dict]) -> list[str]:
+    return [_norm_path(table_path, e["data_file"]["file_path"]) for e in entries]
 
-    return F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/"),
-            r"\+",
-            "%2B",
+
+def _current_live(table_path: str, md: dict) -> list[dict] | None:
+    """Live manifest entries of the current snapshot; None when the
+    table has no current snapshot."""
+    cur_id = md.get("current-snapshot-id")
+    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
+    if cur_id in (None, -1) or cur_id not in snaps:
+        return None
+    return _live_entries(table_path, snaps[cur_id])
+
+
+def _refuse_delete_files(live: list[dict], op: str, hint: str = "") -> None:
+    """Copy-on-write rewrites refuse tables with v2 delete files:
+    rewriting a file invalidates ITS tombstone positions while other
+    files' tombstones must survive."""
+    if any((e["data_file"].get("content", 0) or 0) != 0 for e in live):
+        raise IcebergFeatureError(
+            f"table has v2 delete files: copy-on-write {op} cannot "
+            "carry tombstones across a rewrite — compact_iceberg_table "
+            f"first (it applies them){hint}"
         )
+
+
+def _entry_may_match(entry: dict, ids: dict, filters) -> bool:
+    """Manifest-bounds proof (:func:`_bounds_may_match`) for one entry."""
+    lowers = _as_id_map(entry["data_file"].get("lower_bounds"))
+    uppers = _as_id_map(entry["data_file"].get("upper_bounds"))
+    bounds = {}
+    for fid, (name, ftype) in ids.items():
+        lo = decode_bound(lowers.get(fid), ftype)
+        hi = decode_bound(uppers.get(fid), ftype)
+        if lo is not None or hi is not None:
+            bounds[name] = (lo, hi)
+    return all(_bounds_may_match(bounds, c, op, v) for c, op, v in filters)
+
+
+def _touched(
+    spark: SparkSession,
+    table_path: str,
+    md: dict,
+    schema_json: dict,
+    candidates: list[dict],
+    hit,
+) -> list[dict]:
+    """The candidate entries holding a row ``hit`` keeps — the exact
+    touch probe (:func:`datafiles.touched`)."""
+
+    def path(e: dict) -> str:
+        p = _norm_path(table_path, e["data_file"]["file_path"])
+        return os.path.abspath(p) if fsio.is_local(p) else p
+
+    return datafiles.touched(
+        candidates,
+        lambda es: _mutation_scan(
+            spark, md, schema_json, _paths(table_path, es)
+        ).withColumn(datafiles.FILE_COL, datafiles.decoded_file_path()),
+        hit,
+        path,
     )
+
+
+def _commit_rewrite(
+    table_path: str,
+    md: dict,
+    version: int,
+    live: list[dict],
+    replaced: list[dict],
+    new_entries: list[dict],
+    snapshot_id: int,
+    summary: dict,
+) -> int:
+    """Commit one snapshot that replaces the ``replaced`` live entries
+    with ``new_entries``: every other live entry carries forward
+    verbatim (status EXISTING) into ONE new manifest with the new
+    entries, a one-manifest list, and ``v<version + 1>`` on top of the
+    metadata version read.  Returns ``snapshot_id``."""
+    import time
+
+    meta_dir = os.path.join(table_path, "metadata")
+    gone = {e["data_file"]["file_path"] for e in replaced}
+    carried = [
+        {
+            "status": 0,
+            "snapshot_id": e.get("snapshot_id"),
+            "data_file": e["data_file"],
+        }
+        for e in live
+        if e["data_file"]["file_path"] not in gone
+    ]
+    manifest_path, manifest_len = _write_manifest(
+        meta_dir, _current_schema(md), carried + new_entries
+    )
+    list_path = _write_manifest_list(
+        meta_dir,
+        snapshot_id,
+        [
+            {
+                "manifest_path": manifest_path,
+                "manifest_length": manifest_len,
+                "partition_spec_id": 0,
+                "added_snapshot_id": snapshot_id,
+                "added_data_files_count": len(new_entries),
+                "existing_data_files_count": len(carried),
+                "deleted_data_files_count": len(replaced),
+                "added_rows_count": sum(
+                    e["data_file"]["record_count"] for e in new_entries
+                ),
+            }
+        ],
+    )
+    parent = md.get("current-snapshot-id")
+    snapshot = {
+        "snapshot-id": snapshot_id,
+        "timestamp-ms": int(time.time() * 1000),
+        "manifest-list": list_path,
+        "parent-snapshot-id": None if parent == -1 else parent,
+        "summary": summary,
+    }
+    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), version)
+    return snapshot_id
 
 
 def delete_from_iceberg_table(
@@ -2686,14 +2525,13 @@ def delete_from_iceberg_table(
 ) -> int | None:
     """DELETE: remove every row matching ALL ``filters`` (the same
     (col, op, value) triples the readers prune on), touching ONLY the
-    files whose manifest bounds may contain matches — the
-    ``merge_delta_table`` discipline.  Commits one snapshot (operation
-    ``delete``); returns its id, or None when the bounds prove no file
-    could match (zero I/O).  Rows where the predicate is NULL are KEPT
-    — SQL DELETE semantics.
+    files that provably contain matches: manifest bounds pre-prune,
+    then the exact touch probe (:func:`datafiles.touched`).  Commits one
+    snapshot (operation ``delete``); returns its id, or None when no
+    row matched (no snapshot).  Rows where the predicate is NULL are
+    KEPT — SQL DELETE semantics.
 
-    Two write shapes (the Iceberg twin of
-    ``delete_from_delta_table``'s COW/DV split):
+    Two write shapes (``delete_from_delta_table``'s COW/DV split):
 
     - default (copy-on-write): touched files REWRITE without the
       matching rows (a file left empty disappears); untouched files'
@@ -2720,17 +2558,14 @@ def delete_from_iceberg_table(
     the ``ballista_iceberg`` streaming face refuses delete snapshots
     (a stream cannot retract).
     """
-    import time
     import uuid as _uuid
-
-    from pyspark.sql import functions as F
 
     if not filters:
         raise ValueError(
             "refusing an unconditional DELETE — pass explicit filters "
             "(use mode='overwrite' with an empty DataFrame to truncate)"
         )
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "DELETE")
     if use_position_deletes is None:
         # the spec's routing property: merge-on-read tables get the
@@ -2744,22 +2579,14 @@ def delete_from_iceberg_table(
         )
     schema_json = _current_schema(md)
     ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
+    live = _current_live(table_path, md)
+    if live is None:
         return None
-    live = _live_entries(table_path, snaps[cur_id])
-    if not use_position_deletes and any(
-        (e["data_file"].get("content", 0) or 0) != 0 for e in live
-    ):
-        raise IcebergFeatureError(
-            "table has v2 delete files: copy-on-write DELETE cannot "
-            "carry tombstones across a rewrite — compact_iceberg_table "
-            "first (it applies them), or pass use_position_deletes=True"
+    if not use_position_deletes:
+        _refuse_delete_files(
+            live, "DELETE", ", or pass use_position_deletes=True"
         )
-    if use_position_deletes:
+    else:
         for e in live:
             content = e["data_file"].get("content", 0) or 0
             fmt = (e["data_file"].get("file_format") or "PARQUET").upper()
@@ -2773,108 +2600,65 @@ def delete_from_iceberg_table(
         # renamed tables are fine: the matched scan binds by field id
         # (_mutation_scan) and tombstones are (file, pos) pairs —
         # name-independent by construction
-
-    def _may_match(entry: dict) -> bool:
-        lowers = _as_id_map(entry["data_file"].get("lower_bounds"))
-        uppers = _as_id_map(entry["data_file"].get("upper_bounds"))
-        bounds = {}
-        for fid, (name, ftype) in ids.items():
-            lo = decode_bound(lowers.get(fid), ftype)
-            hi = decode_bound(uppers.get(fid), ftype)
-            if lo is not None or hi is not None:
-                bounds[name] = (lo, hi)
-        return all(_bounds_may_match(bounds, c, op, v) for c, op, v in filters)
-
-    touched = [
+    candidates = [
         e
         for e in live
-        if (e["data_file"].get("content", 0) or 0) == 0 and _may_match(e)
+        if (e["data_file"].get("content", 0) or 0) == 0
+        and _entry_may_match(e, ids, filters)
     ]
+    if use_position_deletes:
+        if not candidates:
+            return None
+        return _delete_with_position_deletes(
+            spark, table_path, md, version, live, candidates, filters
+        )
+    touched = _touched(
+        spark,
+        table_path,
+        md,
+        schema_json,
+        candidates,
+        lambda df: df.where(datafiles.matches(filters)),
+    )
     if not touched:
         return None
-    if use_position_deletes:
-        return _delete_with_position_deletes(
-            spark,
-            table_path,
-            md,
-            snaps[cur_id],
-            live,
-            touched,
-            filters,
-            schema_json,
-            meta_dir,
-            prev_version,
-        )
     snapshot_id = _uuid.uuid4().int >> 75
-    spark_schema = iceberg_to_spark_type(schema_json)
-    paths = [
-        _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
-    ]
-    survivors = _mutation_scan(spark, md, schema_json, paths).where(
-        ~F.coalesce(_filters_to_column(filters), F.lit(False))
-    )
-    new_entries = _stage_entries(survivors, table_path, ids, snapshot_id)
-
-    touched_paths = {e["data_file"]["file_path"] for e in touched}
-    carried = [
-        {
-            "status": 0,
-            "snapshot_id": e.get("snapshot_id"),
-            "data_file": e["data_file"],
-        }
-        for e in live
-        if e["data_file"]["file_path"] not in touched_paths
-    ]
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    new_entries = _stage_entries(
+        datafiles.survivors(
+            _mutation_scan(spark, md, schema_json, _paths(table_path, touched)),
+            filters,
+        ),
+        table_path,
+        ids,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": len(touched),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
     )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+    return _commit_rewrite(
+        table_path,
+        md,
+        version,
+        live,
+        touched,
+        new_entries,
+        snapshot_id,
+        {
             "operation": "delete",
             "rewritten-data-files": str(len(touched)),
             "added-data-files": str(len(new_entries)),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+    )
 
 
 def _delete_with_position_deletes(
     spark: SparkSession,
     table_path: str,
     md: dict,
-    cur_snap: dict,
+    version: int,
     live: list[dict],
     touched: list[dict],
     filters: list[tuple[str, str, object]],
-    schema_json: dict,
-    meta_dir: str,
-    prev_version: int,
 ) -> int | None:
     """The zero-rewrite shape of DELETE (see delete_from_iceberg_table)
-    — the Iceberg v2 twin of ``deltalog._delete_with_deletion_vectors``.
+    — the Iceberg v2 counterpart of Delta's deletion-vector DELETE.
 
     Matched row positions NEVER collect to the driver: the touched
     files scan with ``_metadata`` (file, row_index), existing
@@ -2896,12 +2680,13 @@ def _delete_with_position_deletes(
 
     from ballista_spark.sources.avroio import write_avro_bytes
 
-    paths = [
-        _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
-    ]
-    tagged = _mutation_scan(spark, md, schema_json, paths).withColumns(
+    schema_json = _current_schema(md)
+    meta_dir = os.path.join(table_path, "metadata")
+    tagged = _mutation_scan(
+        spark, md, schema_json, _paths(table_path, touched)
+    ).withColumns(
         {
-            "__dfp": _decoded_file_path_col(),
+            "__dfp": datafiles.decoded_file_path(),
             "__pos": F.col("_metadata.row_index"),
         }
     )
@@ -2911,20 +2696,10 @@ def _delete_with_position_deletes(
         if (e["data_file"].get("content", 0) or 0) == 1
     ]
     if existing:
-        tombstones = (
-            spark.read.parquet(*existing)
-            .select(
-                F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias(
-                    "__dfp"
-                ),
-                F.col("pos").cast("long").alias("__pos"),
-            )
-            .distinct()
+        tagged = tagged.join(
+            _position_tombstones(spark, existing), ["__dfp", "__pos"], "left_anti"
         )
-        tagged = tagged.join(tombstones, ["__dfp", "__pos"], "left_anti")
-    matched = tagged.where(
-        F.coalesce(_filters_to_column(list(filters)), F.lit(False))
-    ).select(
+    matched = tagged.where(datafiles.matches(filters)).select(
         F.col("__dfp").alias("file_path"), F.col("__pos").alias("pos")
     )
     # spec: position-delete rows sorted by (file_path, pos); each output
@@ -2960,17 +2735,7 @@ def _delete_with_position_deletes(
     fsio.write_bytes(manifest_path, manifest_bytes)
 
     new_seq = int(md.get("last-sequence-number", 0)) + 1
-    carried = []
-    prev_manifests, _sch = read_avro_bytes(
-        fsio.read_bytes(_norm_path(table_path, cur_snap["manifest-list"]))
-    )
-    for m in prev_manifests:
-        carried.append(
-            {
-                k: m.get(k)
-                for k in [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
-            }
-        )
+    carried = _current_manifests(table_path, md)
     new_manifest = {
         "manifest_path": manifest_path,
         "manifest_length": len(manifest_bytes),
@@ -2991,7 +2756,7 @@ def _delete_with_position_deletes(
         "timestamp-ms": int(time.time() * 1000),
         "sequence-number": new_seq,
         "manifest-list": list_path,
-        "parent-snapshot-id": cur_snap["snapshot-id"],
+        "parent-snapshot-id": md["current-snapshot-id"],
         "summary": {
             "operation": "delete",
             "added-delete-files": str(len(entries)),
@@ -3014,7 +2779,7 @@ def _delete_with_position_deletes(
             ),
         },
     )
-    _commit_metadata(meta_dir, new_md, prev_version)
+    _commit_metadata(meta_dir, new_md, version)
     return snapshot_id
 
 
@@ -3024,138 +2789,84 @@ def update_iceberg_table(
     set_exprs,
     filters: list[tuple[str, str, object]] | None = None,
 ) -> int | None:
-    """Copy-on-write ``UPDATE ... SET ... WHERE``: rows matching ALL
-    ``filters`` get each ``set_exprs`` column (SQL string or Column)
-    applied, cast back to the column's declared type so the table schema
-    never drifts; non-matching rows in a touched file carry through the
-    rewrite unchanged (``CASE WHEN``).  ``filters=None`` = unconditional
-    full-table UPDATE.  Returns the new snapshot id, or None when the
-    bounds prove no file could match (zero I/O).  Same discipline and
-    restrictions as :func:`delete_from_iceberg_table`: untouched files'
-    manifest records carry forward verbatim; v2 delete-file tables
-    refuse (compact first); the streaming face refuses the resulting
-    overwrite snapshot (an update changes rows).
+    """Copy-on-write ``UPDATE ... SET ... WHERE`` with
+    :func:`datafiles.updated_rows`: rows matching ALL ``filters`` get
+    each ``set_exprs`` column (SQL string or Column) applied, cast back
+    to the column's declared type so the table schema never drifts;
+    non-matching rows in a touched file carry through the rewrite
+    unchanged (``CASE WHEN``).  ``filters=None`` = unconditional
+    full-table UPDATE.  Returns the new snapshot id, or None when no
+    row matched (no snapshot).  Same discipline and restrictions as
+    :func:`delete_from_iceberg_table`: untouched files' manifest
+    records carry forward verbatim; v2 delete-file tables refuse
+    (compact first); the streaming face refuses the resulting overwrite
+    snapshot (an update changes rows).
     """
-    import time
     import uuid as _uuid
 
-    from pyspark.sql import functions as F
-
-    if not set_exprs:
-        raise ValueError("UPDATE needs at least one SET column")
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "UPDATE")
     schema_json = _current_schema(md)
-    ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
-        return None
-    live = _live_entries(table_path, snaps[cur_id])
-    if any((e["data_file"].get("content", 0) or 0) != 0 for e in live):
-        raise IcebergFeatureError(
-            "table has v2 delete files: copy-on-write UPDATE cannot "
-            "carry tombstones across a rewrite — compact_iceberg_table "
-            "first (it applies them)"
-        )
     spark_schema = iceberg_to_spark_type(schema_json)
-    by_name = {f.name: f for f in spark_schema.fields}
-    for name in set_exprs:
-        if name not in by_name:
-            raise ValueError(f"SET column {name!r} is not in the table schema")
-
-    if filters:
-        def _may_match(entry: dict) -> bool:
-            lowers = _as_id_map(entry["data_file"].get("lower_bounds"))
-            uppers = _as_id_map(entry["data_file"].get("upper_bounds"))
-            bounds = {}
-            for fid, (fname, ftype) in ids.items():
-                lo = decode_bound(lowers.get(fid), ftype)
-                hi = decode_bound(uppers.get(fid), ftype)
-                if lo is not None or hi is not None:
-                    bounds[fname] = (lo, hi)
-            return all(
-                _bounds_may_match(bounds, c, op, v) for c, op, v in filters
-            )
-
-        touched = [e for e in live if _may_match(e)]
-        pred = F.coalesce(_filters_to_column(list(filters)), F.lit(False))
-    else:
-        touched = list(live)
-        pred = F.lit(True)
+    datafiles.check_set_columns(set_exprs, spark_schema)
+    ids = _field_ids(schema_json)
+    live = _current_live(table_path, md)
+    if live is None:
+        return None
+    _refuse_delete_files(live, "UPDATE")
+    touched = (
+        _touched(
+            spark,
+            table_path,
+            md,
+            schema_json,
+            [e for e in live if _entry_may_match(e, ids, filters)],
+            lambda df: df.where(datafiles.matches(filters)),
+        )
+        if filters
+        else live
+    )
     if not touched:
         return None
     snapshot_id = _uuid.uuid4().int >> 75
-    paths = [
-        _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
-    ]
-    base = _mutation_scan(spark, md, schema_json, paths)
-    # SQL UPDATE: all SET right-hand sides see the PRE-update row
-    # (`SET a = b, b = a` swaps) — one select projection, not chained
-    # withColumn
-    replacements = {
-        name: F.when(
-            pred,
-            (F.expr(expr) if isinstance(expr, str) else expr).cast(
-                by_name[name].dataType
-            ),
-        ).otherwise(F.col(name))
-        for name, expr in set_exprs.items()
-    }
-    updated = base.select(
-        *[
-            replacements[c].alias(c) if c in replacements else F.col(c)
-            for c in base.columns
-        ]
-    )
-    new_entries = _stage_entries(updated, table_path, ids, snapshot_id)
-
-    touched_paths = {e["data_file"]["file_path"] for e in touched}
-    carried = [
-        {
-            "status": 0,
-            "snapshot_id": e.get("snapshot_id"),
-            "data_file": e["data_file"],
-        }
-        for e in live
-        if e["data_file"]["file_path"] not in touched_paths
-    ]
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    new_entries = _stage_entries(
+        datafiles.updated_rows(
+            _mutation_scan(spark, md, schema_json, _paths(table_path, touched)),
+            set_exprs,
+            spark_schema,
+            filters,
+        ),
+        table_path,
+        ids,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": len(touched),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
     )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+    return _commit_rewrite(
+        table_path,
+        md,
+        version,
+        live,
+        touched,
+        new_entries,
+        snapshot_id,
+        {
             "operation": "overwrite",
             "rewritten-data-files": str(len(touched)),
             "added-data-files": str(len(new_entries)),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+    )
+
+
+def _last_txn(md: dict, app_id: str) -> tuple[int, int] | None:
+    """(highest txn version, its snapshot id) an app recorded in the
+    snapshot summaries — the exactly-once replay check."""
+    last = None
+    for s in md.get("snapshots") or []:
+        summ = s.get("summary") or {}
+        if summ.get("txn-app-id") == app_id:
+            v = int(summ.get("txn-version", -1))
+            if last is None or v > last[0]:
+                last = (v, s["snapshot-id"])
+    return last
 
 
 def merge_iceberg_table(
@@ -3168,8 +2879,8 @@ def merge_iceberg_table(
     txn_app_id: str | None = None,
     txn_version: int | None = None,
 ) -> int | None:
-    """``MERGE INTO`` the Iceberg table — the transactional twin of
-    ``deltalog.merge_delta_table`` with identical semantics: matched
+    """``MERGE INTO`` the Iceberg table with ``merge_delta_table``'s
+    semantics (the row plans are :func:`datafiles.merge_rows`): matched
     rows (on the ``on`` keys) are replaced by the source row (SCD-1) or
     deleted; unmatched source rows insert when ``insert_not_matched``.
     One atomic snapshot (operation ``overwrite`` — a merge changes
@@ -3177,59 +2888,40 @@ def merge_iceberg_table(
     for a no-op merge.
 
     Same three-step touch-only shape: (1) manifest-bounds pre-prune of
-    candidate files for single-key merges, (2) a map-only
-    ``input_file_name`` probe semi-joined against the broadcast source
+    candidate files for single-key merges, (2) the exact touch probe
+    (:func:`datafiles.touched`) semi-joined against the broadcast source
     keys, (3) rewrite of ONLY the touched files — untouched files'
     manifest records carry forward verbatim.  A 1M-row CDC batch
     against a clustered 100 TB table rewrites a few files, not the
     table.  Tables with v2 delete files refuse (compact first — it
     applies the tombstones).
     """
-    import time
     import uuid as _uuid
-
-    from pyspark.sql import functions as F
 
     if when_matched not in ("update", "delete"):
         raise ValueError("when_matched must be update|delete")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be passed together")
     on = list(on)
-    md = _load_metadata(table_path)
+    md, version = _load_metadata(table_path)
     _refuse_v3_write(md, "MERGE")
     if txn_app_id is not None:
         # streaming-upsert idempotence: a replayed epoch is detected in
         # the snapshot history and skipped BEFORE any file is staged
-        last = None
-        for s in md.get("snapshots") or []:
-            summ = s.get("summary") or {}
-            if summ.get("txn-app-id") == txn_app_id:
-                v = int(summ.get("txn-version", -1))
-                if last is None or v > last:
-                    last = v
-        if last is not None and int(txn_version) <= last:
+        last = _last_txn(md, txn_app_id)
+        if last is not None and int(txn_version) <= last[0]:
             return None
     schema_json = _current_schema(md)
     ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
+    live = _current_live(table_path, md)
+    if live is None:
         # empty table: nothing can match, but unmatched source rows
         # still INSERT (the CDC-bootstrap case — dropping them here
         # would silently lose the stream's first epoch)
         if not insert_not_matched:
             return None
         live = []
-        cur_id = None
-    else:
-        live = _live_entries(table_path, snaps[cur_id])
-    if any((e["data_file"].get("content", 0) or 0) != 0 for e in live):
-        raise IcebergFeatureError(
-            "table has v2 delete files: MERGE cannot carry tombstones "
-            "across a rewrite — compact_iceberg_table first"
-        )
+    _refuse_delete_files(live, "MERGE")
     spark_schema = iceberg_to_spark_type(schema_json)
     if when_matched == "update" or insert_not_matched:
         shape = lambda sch: [(f.name, f.dataType) for f in sch.fields]  # noqa: E731
@@ -3241,128 +2933,54 @@ def merge_iceberg_table(
             )
     source = source.cache()
 
-    def _bounds_of(entry: dict) -> dict:
-        lowers = _as_id_map(entry["data_file"].get("lower_bounds"))
-        uppers = _as_id_map(entry["data_file"].get("upper_bounds"))
-        bounds = {}
-        for fid, (name, ftype) in ids.items():
-            lo = decode_bound(lowers.get(fid), ftype)
-            hi = decode_bound(uppers.get(fid), ftype)
-            if lo is not None or hi is not None:
-                bounds[name] = (lo, hi)
-        return bounds
-
     # 1. stats pre-prune (proof-based superset of the true touch set)
     candidates = live
-    if len(on) == 1:
-        key = on[0]
-        kb = source.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
-        if kb["lo"] is not None:
-            lo, hi = kb["lo"], kb["hi"]
-            candidates = [
-                e
-                for e in live
-                if _bounds_may_match(_bounds_of(e), key, ">=", lo)
-                and _bounds_may_match(_bounds_of(e), key, "<=", hi)
-            ]
-
-    def _paths(entries):
-        return [
-            _norm_path(table_path, e["data_file"]["file_path"]) for e in entries
+    bounds = datafiles.key_range(source, on[0]) if len(on) == 1 else None
+    if bounds is not None:
+        lo, hi = bounds
+        candidates = [
+            e
+            for e in live
+            if _entry_may_match(e, ids, [(on[0], ">=", lo), (on[0], "<=", hi)])
         ]
 
     # 2. touch probe over the candidates only (map-only broadcast semi)
-    touched_paths: set[str] = set()
-    if candidates:
-        probe = (
-            _mutation_scan(spark, md, schema_json, _paths(candidates))
-            .withColumn("__file", F.input_file_name())
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .select("__file")
-            .distinct()
-        )
-        for r in probe.collect():
-            p = r["__file"]
-            if p.startswith("file:"):
-                p = p[5:]
-                while p.startswith("//"):
-                    p = p[1:]
-            touched_paths.add(p)
-    touched = [
-        e
-        for e in live
-        if _norm_path(table_path, e["data_file"]["file_path"]) in touched_paths
-    ]
+    touched = _touched(
+        spark,
+        table_path,
+        md,
+        schema_json,
+        candidates,
+        lambda df: df.join(datafiles.merge_keys(source, on), on=on, how="semi"),
+    )
 
     # 3. rewrite touched files + stage inserts
     snapshot_id = _uuid.uuid4().int >> 75
+    rewritten, inserts = datafiles.merge_rows(
+        _mutation_scan(spark, md, schema_json, _paths(table_path, touched))
+        if touched
+        else None,
+        source,
+        on,
+        when_matched,
+        insert_not_matched,
+    )
     new_entries: list[dict] = []
-    matched_keys = None
-    if touched:
-        touched_df = _mutation_scan(spark, md, schema_json, _paths(touched))
-        kept = touched_df.join(
-            F.broadcast(source.select(*on).distinct()), on=on, how="left_anti"
-        )
-        matched_keys = (
-            touched_df.select(*on)
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .distinct()
-        )
-        new_rows = kept
-        if when_matched == "update":
-            updates = source.join(matched_keys, on=on, how="semi")
-            new_rows = kept.unionByName(updates)
-        new_entries.extend(
-            _stage_entries(new_rows, table_path, ids, snapshot_id)
-        )
-    if insert_not_matched:
-        inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=on, how="left_anti")
-        new_entries.extend(
-            _stage_entries(inserts, table_path, ids, snapshot_id)
-        )
+    for rows in (rewritten, inserts):
+        if rows is not None:
+            new_entries.extend(_stage_entries(rows, table_path, ids, snapshot_id))
     source.unpersist()
     if not new_entries and not touched:
         return None
-
-    carried = [
-        {
-            "status": 0,
-            "snapshot_id": e.get("snapshot_id"),
-            "data_file": e["data_file"],
-        }
-        for e in live
-        if _norm_path(table_path, e["data_file"]["file_path"])
-        not in touched_paths
-    ]
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    return _commit_rewrite(
+        table_path,
+        md,
+        version,
+        live,
+        touched,
+        new_entries,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": len(touched),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+        {
             "operation": "overwrite",  # a merge changes rows
             "merge-keys": ",".join(on),
             "matched-action": when_matched,
@@ -3374,6 +2992,4 @@ def merge_iceberg_table(
                 else {}
             ),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+    )

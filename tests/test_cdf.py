@@ -157,7 +157,7 @@ def test_cdf_long_window_bounded_plan(spark, tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ballista_spark.sources import deltalog
+    from ballista_spark.sources import datafiles, deltalog
 
     table = str(tmp_path / "t")
     schema = _json.dumps({
@@ -185,7 +185,7 @@ def test_cdf_long_window_bounded_plan(spark, tmp_path, monkeypatch):
                      "size": 1, "modificationTime": 0, "dataChange": True}}
         ])
 
-    monkeypatch.setattr(deltalog, "CDF_CHECKPOINT_EVERY", 8)
+    monkeypatch.setattr(datafiles, "CDF_CHECKPOINT_EVERY", 8)
     trunc = deltalog.read_delta_cdf(spark, table, from_version=0)
     plan = trunc._jdf.queryExecution().logical().toString()
     assert "ExistingRDD" in plan or "LogicalRDD" in plan  # truncated
@@ -194,7 +194,7 @@ def test_cdf_long_window_bounded_plan(spark, tmp_path, monkeypatch):
     got = sorted(
         (r["_commit_version"], r["id"]) for r in trunc.collect()
     )
-    monkeypatch.setattr(deltalog, "CDF_CHECKPOINT_EVERY", 10_000)
+    monkeypatch.setattr(datafiles, "CDF_CHECKPOINT_EVERY", 10_000)
     naive = sorted(
         (r["_commit_version"], r["id"])
         for r in deltalog.read_delta_cdf(spark, table, from_version=0).collect()

@@ -673,22 +673,6 @@ def test_dv_write_then_optimize_purges(spark, tmp_path):
     assert after == before and 3 not in after
 
 
-def test_dv_forced_executor_decode_identical(spark, tmp_path, monkeypatch):
-    """The executor-side tombstone decode (mapInPandas over the
-    (file, descriptor) list) returns byte-identical rows to the local
-    driver fast path — same pin discipline as the footer-stats pass."""
-    import ballista_spark.sources.deltalog as dl
-
-    table = _base_table(tmp_path)
-    _delete_with_dv(table, 1, "f0.parquet", _dv_descriptor_u(table, [1, 3]))
-    _delete_with_dv(table, 2, "f1.parquet", _dv_descriptor_u(table, [0, 4]))
-    driver = sorted(map(tuple, read_delta_table(spark, table).collect()))
-    assert len(driver) == 6
-    monkeypatch.setattr(dl, "DV_DECODE_FORCE_EXECUTOR", True)
-    forced = sorted(map(tuple, read_delta_table(spark, table).collect()))
-    assert forced == driver
-
-
 def test_dv_large_cardinality_stays_off_driver(spark, tmp_path):
     """≥1M-position lifecycle: a broad DV DELETE packs per-file bitmaps
     executor-side (the driver sees only file-count segments), and the

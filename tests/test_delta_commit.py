@@ -5,10 +5,11 @@ test read its snapshot and before it commits — the window in which a
 commit built on a stale snapshot used to publish over the racer's
 change.  Metadata operations must rebuild on the racer's snapshot; data
 operations whose replaced files changed must refuse, and so must an
-overwrite that a racer appended to; an append racing an UPDATE retries
-on top of it.  Plus the checkpoint policy: any commit landing on a
-multiple of ``CHECKPOINT_INTERVAL`` checkpoints, and the checkpoint
-replays to the same snapshot as the JSON log.
+overwrite that a racer appended to and a rewrite that a racer made
+append-only; an append racing an UPDATE retries on top of it.  Plus the
+checkpoint policy: any commit landing on a multiple of
+``CHECKPOINT_INTERVAL`` checkpoints, and the checkpoint replays to the
+same snapshot as the JSON log.
 """
 
 from __future__ import annotations
@@ -124,6 +125,24 @@ def test_rewrite_raced_by_delete_refuses(spark, tmp_path, monkeypatch, op):
         _RACED_OPS[op](spark, path)
     assert read_delta_snapshot(path).version == 1  # the racer's commit
     assert _rows(spark, path) == [(k, k) for k in range(3, 10)]
+
+
+@pytest.mark.parametrize("op", sorted(_RACED_OPS))
+def test_rewrite_raced_by_append_only_refuses(spark, tmp_path, monkeypatch, op):
+    """The racer makes the table append-only while the operation reads
+    its files.  The retry is built on the racer's snapshot, whose writer
+    protocol forbids removing rows, so the operation must refuse as it
+    would serially, and the rows stay."""
+    path = _table(spark, tmp_path)
+    _race(
+        monkeypatch,
+        "_scan_snapshot",
+        lambda: set_delta_table_properties(path, {"delta.appendOnly": "true"}),
+    )
+    with pytest.raises(deltalog.DeltaProtocolError, match="append-only"):
+        _RACED_OPS[op](spark, path)
+    assert read_delta_snapshot(path).version == 1  # the racer's commit
+    assert _rows(spark, path) == [(k, k) for k in range(10)]
 
 
 def test_update_raced_by_append_keeps_both(spark, tmp_path, monkeypatch):

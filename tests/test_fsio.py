@@ -114,20 +114,13 @@ def _mock_delta_table(n_files=3):
                 }),
                 sink,
             )
-        from ballista_spark.sources.deltalog import _file_stats_json
+        from ballista_spark.sources.datafiles import StagedFile, fold_footer
+        from ballista_spark.sources.deltalog import _add_action, _stat_scalar
 
-        stats, n = _file_stats_json(f"{table}/{rel}", ["id", "cat"])
-        assert n == 5
-        adds.append({
-            "add": {
-                "path": rel,
-                "partitionValues": {},
-                "size": fsio.file_size(f"{table}/{rel}"),
-                "modificationTime": 0,
-                "dataChange": True,
-                "stats": stats,
-            }
-        })
+        footer = fold_footer(f"{table}/{rel}", ["id", "cat"], _stat_scalar)
+        assert footer.num_rows == 5
+        size = fsio.file_size(f"{table}/{rel}")
+        adds.append(_add_action(StagedFile(rel, size, footer), {}, True))
     meta = {
         "metaData": {
             "id": "m",
@@ -185,7 +178,6 @@ def test_delta_metadata_plane_on_mock_fs(mockfs, warnmode):
 def test_iceberg_metadata_plane_on_mock_fs(mockfs, warnmode):
     from ballista_spark.sources.iceberg import (
         _commit_metadata,
-        _current_metadata_version,
         _live_entries,
         _load_metadata,
         _write_manifest,
@@ -246,8 +238,8 @@ def test_iceberg_metadata_plane_on_mock_fs(mockfs, warnmode):
         "snapshot-log": [{"snapshot-id": 77, "timestamp-ms": 0}],
     }
     _commit_metadata(meta_dir, md, 0)
-    assert _current_metadata_version(meta_dir) == 1
-    back = _load_metadata(table)
+    back, version = _load_metadata(table)
+    assert version == 1
     assert back["current-snapshot-id"] == 77
     live = _live_entries(table, back["snapshots"][0])
     assert len(live) == 1
@@ -286,65 +278,6 @@ def test_hudi_timeline_on_mock_fs(mockfs, warnmode):
     assert hudi_snapshot_files(table, as_of_instant=inst1) == [
         f"{table}/fg1_0-1-1_{inst1}.parquet"
     ]
-
-
-# ----------------------------------- executor-side footer stats (local)
-
-
-def test_distributed_stats_path_matches_driver_loop(spark, tmp_path, monkeypatch):
-    """Forcing the executor-side mapInPandas stats pass (threshold=1)
-    must produce byte-identical add actions to the driver loop."""
-    from ballista_spark.sources import deltalog
-
-    df = spark.createDataFrame(
-        [(i, f"c{i % 3}", float(i)) for i in range(40)],
-        "id long, cat string, v double",
-    ).repartition(4)
-
-    p1 = str(tmp_path / "driver")
-    deltalog.write_delta_table(df, p1)
-    monkeypatch.setattr(deltalog, "EXECUTOR_STATS_MIN_FILES", 1)
-    monkeypatch.setattr(deltalog, "EXECUTOR_STATS_FORCE", True)
-    p2 = str(tmp_path / "exec")
-    deltalog.write_delta_table(df, p2)
-
-    def _adds(path):
-        snap = deltalog.read_delta_snapshot(path)
-        return sorted(
-            (f.stats["numRecords"],
-             json.dumps(f.stats, sort_keys=True))
-            for f in snap.files
-        )
-
-    assert _adds(p1) == _adds(p2)
-    got = {r["id"] for r in deltalog.read_delta_table(spark, p2).collect()}
-    assert got == set(range(40))
-
-
-def test_distributed_bounds_path_matches_driver_loop(spark, tmp_path, monkeypatch):
-    from ballista_spark.sources import iceberg
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(40)], "id long, v double"
-    ).repartition(4)
-    p1 = str(tmp_path / "driver")
-    iceberg.write_iceberg_table(df, p1)
-    monkeypatch.setattr(iceberg, "EXECUTOR_STATS_MIN_FILES", 1)
-    monkeypatch.setattr(iceberg, "EXECUTOR_STATS_FORCE", True)
-    p2 = str(tmp_path / "exec")
-    iceberg.write_iceberg_table(df, p2)
-
-    def _bounds(path):
-        snap = iceberg.read_iceberg_snapshot(path)
-        return sorted(
-            (f[1], json.dumps({k: str(v) for k, v in (f[2] or {}).items()},
-                              sort_keys=True))
-            for f in snap.files
-        )
-
-    assert _bounds(p1) == _bounds(p2)
-    got = {r["id"] for r in iceberg.read_iceberg_table(spark, p2).collect()}
-    assert got == set(range(40))
 
 
 def test_authority_scheme_path_split(monkeypatch):

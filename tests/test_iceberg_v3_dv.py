@@ -150,17 +150,6 @@ def test_v3_dv_read_applies_exactly(spark, tmp_path):
     assert cats[2] == "c2"
 
 
-def test_v3_dv_forced_executor_decode_identical(spark, tmp_path, monkeypatch):
-    import ballista_spark.sources.iceberg as ice
-
-    table = _v3_table(tmp_path, {"f1.parquet": [0, 5, 9]})
-    driver = sorted(map(tuple, read_iceberg_table(spark, table).collect()))
-    assert len(driver) == 17
-    monkeypatch.setattr(ice, "DV_DECODE_FORCE_EXECUTOR", True)
-    forced = sorted(map(tuple, read_iceberg_table(spark, table).collect()))
-    assert forced == driver
-
-
 def test_v3_dv_cardinality_mismatch_raises(spark, tmp_path):
     table = _v3_table(tmp_path, {"f1.parquet": [1]})
     # corrupt the manifest-declared record_count by rewriting the manifest

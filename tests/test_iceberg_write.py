@@ -120,6 +120,31 @@ def test_concurrent_version_collision_single_winner(spark, tmp_path):
         write_iceberg_table(_df(spark, [(2, "b", 2.0)]), path)
 
 
+def test_rename_raced_by_append_refuses(spark, tmp_path, monkeypatch):
+    """An append that commits while RENAME COLUMN vets the table's files
+    must survive: the rename commits on the metadata version it read,
+    so it loses the exclusive create instead of dropping the append's
+    snapshot."""
+    from ballista_spark.sources import iceberg
+    from ballista_spark.sources.iceberg import rename_iceberg_column
+
+    path = str(tmp_path / "t")
+    write_iceberg_table(_df(spark, [(i, "a", 1.0) for i in range(5)]), path)
+    real = iceberg._files_missing_field_ids
+
+    def vet_while_appending(*args, **kwargs):
+        write_iceberg_table(_df(spark, [(i, "b", 2.0) for i in range(5)]), path)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(iceberg, "_files_missing_field_ids", vet_while_appending)
+    with pytest.raises(FileExistsError):
+        rename_iceberg_column(path, "cat", "label", spark=spark)
+    md = _read_meta(path)
+    assert len(md["snapshots"]) == 2
+    assert read_iceberg_table(spark, path).columns == ["id", "cat", "v"]
+    assert read_iceberg_table(spark, path).count() == 10
+
+
 def test_empty_partitions_never_committed(spark, tmp_path):
     path = str(tmp_path / "t")
     df = _df(spark, [(1, "a", 1.0)]).repartition(8)  # 7 empty task outputs
@@ -587,7 +612,7 @@ def test_compaction_applies_positional_deletes(spark, tmp_path):
         ),
         dpath,
     )
-    md = _load_metadata(path)
+    md, _ = _load_metadata(path)
     from ballista_spark.sources.iceberg import _MANIFEST_FILE_SCHEMA
 
     mdir = os.path.join(path, "metadata")

@@ -39,6 +39,7 @@ THRESHOLD_S = 10.0
 #: lakehouse commit-path contract.  An entry names a test file, a test
 #: function (all its parameters) or one node ID, in tier-key form.
 KEEP = (
+    "test_datafiles.py::test_change_feed_same_on_both_formats",
     "test_delta_commit.py",
     "test_deltalog.py::test_checkpoint_bounds_log_replay",
     "test_sql_dml.py::test_sql_dml_end_to_end[delta]",
