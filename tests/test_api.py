@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 import ballista_spark.functions as bf
 from ballista_spark.context import BallistaContext
 from ballista_spark.types import arrow_name_to_spark, schema, spark_type_to_arrow_name
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_frames_match
 
 # --- types (ballista.proto:750-785; python/src/datatypes.rs:256-269) --------
 
@@ -118,21 +118,65 @@ def test_case_builder(spark):
 # --- DataFrame surface + sinks (SURVEY.md §2.1, §2.9) -----------------------
 
 
-def test_dataframe_surface_chain(spark):
+def test_dataframe_surface_chain(spark, duck):
+    """The BallistaDataFrame chain (join, filter, aggregate, sort, limit)
+    with ``bf.cast`` to an Arrow alias and to a DDL string, and ``bf.when``,
+    matches DuckDB on the same parquet; the semi/anti joins match the
+    EXISTS/NOT EXISTS key sets and the cross join the full pair list."""
     ctx = BallistaContext(spark)
-    ctx.register_parquet("part_t", os.path.join(SF_SMOKE, "part.parquet"))
+    for t in ("customer", "orders", "region", "nation"):
+        ctx.register_parquet(f"{t}_t", os.path.join(SF_SMOKE, f"{t}.parquet"))
+    cust = ctx.table("customer_t").select_columns("c_custkey", "c_name", "c_mktsegment")
+    orders = ctx.table("orders_t")
+    price_dec = bf.cast(bf.col("o_totalprice"), "decimal(18,6)")
+    assert orders.select(price_dec.alias("d")).schema()["d"].dataType == T.DecimalType(18, 6)
+    urgent = bf.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     out = (
-        ctx.table("part_t")
-        .select_columns("p_partkey", "p_size", "p_retailprice")
-        .filter(bf.col("p_size") > 25)
-        .aggregate([bf.col("p_size")], [bf.count(bf.lit(1)).alias("n")])
-        .sort(bf.col("p_size").asc_nulls_first())
-        .limit(5)
+        cust.join(orders, on=[cust.df.c_custkey == orders.df.o_custkey])
+        .filter(bf.col("o_totalprice").between(1000.0, 400000.0))
+        .aggregate(
+            [bf.col("c_mktsegment")],
+            [
+                bf.count(bf.lit(1)).alias("n"),
+                bf.count_distinct("o_custkey").alias("n_cust"),
+                bf.round(bf.sum(price_dec), 2).cast("double").alias("total"),
+                bf.sum(bf.cast(bf.when(urgent, 1).otherwise(0), "i64")).alias("n_urgent"),
+            ],
+        )
+        .sort(bf.col("n").desc(), bf.col("c_mktsegment").asc())
+        .limit(4)
     )
     rows = out.collect()
-    assert len(rows) <= 5
-    assert rows == sorted(rows, key=lambda r: r["p_size"])
+    assert len(rows) == 4
+    assert rows == sorted(rows, key=lambda r: (-r["n"], r["c_mktsegment"]))
     assert out.schema()["n"].dataType == T.LongType()
+    assert out.schema()["n_urgent"].dataType == T.LongType()
+    duck.execute("SET schema 'smoke'")
+    assert_frames_match(out.df, duck.sql("""
+SELECT c_mktsegment, COUNT(*) AS n, COUNT(DISTINCT o_custkey) AS n_cust,
+       CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS total,
+       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_urgent
+FROM customer JOIN orders ON c_custkey = o_custkey
+WHERE o_totalprice BETWEEN 1000.0 AND 400000.0
+GROUP BY c_mktsegment ORDER BY n DESC, c_mktsegment LIMIT 4
+"""))
+
+    big = orders.filter(bf.col("o_totalprice") > 400000.0)
+    for how, exists in (("left_semi", "EXISTS"), ("left_anti", "NOT EXISTS")):
+        keys = cust.join(big, on=[cust.df.c_custkey == big.df.o_custkey], how=how)
+        keys = keys.select(bf.col("c_custkey"), bf.col("c_name"))
+        assert keys.count() > 0, how
+        assert_frames_match(keys.df, duck.sql(f"""
+SELECT c_custkey, c_name FROM customer
+WHERE {exists} (SELECT 1 FROM orders
+                WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
+"""))
+    pairs = ctx.table("region_t").join(ctx.table("nation_t"), how="cross")
+    assert_frames_match(
+        pairs.select_columns("r_name", "n_name").df,
+        duck.sql("SELECT r_name, n_name FROM region CROSS JOIN nation"),
+    )
 
 
 def test_sink_round_trips(spark, tmp_path=None):
@@ -211,6 +255,12 @@ def test_create_external_table_and_sql(spark):
     n = ctx.sql("SELECT COUNT(*) AS n FROM ext_orders").collect()[0]["n"]
     assert n > 0
     assert "ext_orders" in ctx.tables()
+    # an always-false filter plans an empty relation that keeps the schema
+    empty = ctx.sql("SELECT o_orderkey, o_totalprice FROM ext_orders WHERE 1 = 0")
+    assert empty.collect() == []
+    assert [(f.name, f.dataType) for f in empty.schema()] == [
+        ("o_orderkey", T.LongType()), ("o_totalprice", T.DoubleType()),
+    ]
 
 
 def test_explain_surface(spark, capsys):
@@ -225,10 +275,9 @@ def test_explain_surface(spark, capsys):
 
 
 def test_percentile_approx_within_tolerance(spark):
-    """Approximate quantile sketch lands near the exact percentile
-    (engine-specific values → test-only, like HLL)."""
-    import os
-
+    """The approximate quantile sketch and the HLL++ distinct count land
+    within 5% of their exact values (sketch values are engine-specific, so
+    this is test-only; the graded HLL branch keeps a 10% bound)."""
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(os.path.join(SF_SMOKE, "lineitem.parquet"))
@@ -237,6 +286,11 @@ def test_percentile_approx_within_tolerance(spark):
         F.expr("percentile(l_extendedprice, 0.5)").alias("exact"),
     ).collect()[0]
     assert abs(row["approx"] - row["exact"]) <= row["exact"] * 0.05
+    for r in df.groupBy("l_returnflag").agg(
+        F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx"),
+        F.countDistinct("l_partkey").alias("exact"),
+    ).collect():
+        assert abs(r["approx"] - r["exact"]) <= r["exact"] * 0.05, r
 
 
 def test_parquet_schema_probe(spark):

@@ -41,8 +41,11 @@ def _queries():
     )
 
 
+_PATHS = _queries()
+
+
 @pytest.mark.parametrize(
-    "path", _queries(), ids=lambda p: os.path.basename(p)[:-4]
+    "path", _PATHS, ids=[os.path.basename(p)[:-4] for p in _PATHS]
 )
 def test_reference_sql_parses_and_executes(empty_tpch, path):
     text = open(path).read()

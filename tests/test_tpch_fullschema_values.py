@@ -113,7 +113,12 @@ def _assert_rows_equal(got, want, qname):
                 assert gv == wv, f"{qname} row {i}: {gv!r} != {wv!r}"
 
 
-@pytest.mark.parametrize("path", _queries(), ids=lambda p: os.path.basename(p)[:-4])
+_PATHS = _queries()
+
+
+@pytest.mark.parametrize(
+    "path", _PATHS, ids=[os.path.basename(p)[:-4] for p in _PATHS]
+)
 def test_verbatim_reference_sql_value_parity(spark_tpch, duck_tpch, path):
     text = _read(path)
     qname = os.path.basename(path)[:-4]
