@@ -21,8 +21,12 @@ def _corpora():
 
     21 TPC-H (the reference's declared contract, q1–q22 minus q15)
     + 16 LLM-pipeline operators (dedup / similarity / text / multimodal)
-    + 13 consolidated operator-family coverage entries (queries/graded.py),
-    whose tagged branches are the fine-grained operator checks.
+    + 13 consolidated operator-family coverage entries (queries/graded.py).
+
+    The fine-grained 45-entry coverage corpus and the 9 DataFrame-API TPC-H
+    twins remain fully oracle-tested in pytest (tests/test_coverage.py,
+    tests/test_tpch_df.py) — they are superseded *in the driver window*, not
+    removed.
     """
     from ballista_spark.queries.graded import GRADED_COVERAGE
     from ballista_spark.queries.pipeline import PIPELINE_QUERIES

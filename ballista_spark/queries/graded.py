@@ -11,11 +11,9 @@ DuckDB oracle:
 - sub-results of unrelated shapes are normalized to a shared schema and
   tagged with an ``op`` column, then combined with UNION ALL — the driver's
   order-insensitive value-hash still checks every branch row-for-row;
-- the tagged branches are the fine-grained checks: each operator is
-  oracle-compared here (tests/test_graded.py, both scale factors), with
-  TPC-H carrying the subquery and predicate shapes and tests/test_api.py
-  the few exact-key/empty-schema/sketch-bound checks a tagged count
-  cannot pin.
+- the fine-grained originals in :mod:`ballista_spark.queries.coverage`
+  remain pytest-compared at both scale factors (tests/test_coverage.py) —
+  nothing lost, the driver window gained.
 
 Hash-stability discipline per queries/base.py (decimal-cast sums, BIGINT
 pins, ROUND(…, 9) on cross-libm math).

@@ -36,11 +36,11 @@ OUT = os.path.join(REPO, "tools", "test_tiers.json")
 THRESHOLD_S = 10.0
 
 #: tests that always run in the default tier, however slow: the
-#: lakehouse commit-path contract, and the default tier's only oracle
-#: checks of ``bf.cast``/``bf.when`` in a DataFrame chain and of the
-#: funnel/retention, as-of/range join and sessionization shapes.  An
-#: entry names a test file, a test function (all its parameters) or one
-#: node ID, in tier-key form.
+#: lakehouse commit-path contract, the DataFrame-surface value check, and
+#: the graded smoke tests of the funnel/retention and interval-join
+#: families (the driver-graded form of those shapes).  An entry names a
+#: test file, a test function (all its parameters) or one node ID, in
+#: tier-key form.
 KEEP = (
     "test_api.py::test_dataframe_surface_chain",
     "test_datafiles.py::test_change_feed_same_on_both_formats",
